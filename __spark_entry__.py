@@ -24,6 +24,8 @@ def _configure(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # fine if already set statically
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # catalog SQL embeds regex literals such as '\\s+'
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     return spark
 
 

@@ -20,20 +20,11 @@ Enabled via ``spark.python.daemon.module`` (public conf, documented in
 the Spark source) in :func:`riemann_spark.session.get_spark`. Every
 import is inside try/except: a missing optional module must never take
 down the daemon — worst case a worker re-imports it after fork, which
-is exactly the stock behavior.
+is exactly the stock behavior. The daemon finds this package through the
+``PYTHONPATH`` that ``get_spark`` sets before the JVM launches.
 """
 
 from __future__ import annotations
-
-import os
-import sys
-
-# The engine package may be reachable only via the repo root (the JVM's
-# cwd when launched by bench/tools, but not necessarily for an embedding
-# driver): make the package root importable before the preload imports.
-_pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if _pkg_root not in sys.path:
-    sys.path.insert(0, _pkg_root)
 
 for _mod in (
     # third-party heavyweights (pandas pulls numpy; ~3s cold on this box)

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from riemann_spark.functions.text import fingerprint, tokens
+from riemann_spark.operators.skew import spread_for_python
 
 # Shared runaway-bucket caps (ADVICE r11): pair generation drops LSH band
 # buckets / inverted-index shingle postings larger than this (quadratic
@@ -40,55 +41,6 @@ MAX_SHINGLE_DF = 1000
 # stored labels instead of silently serving stale state (ADVICE r12).
 WIN_MIN_SHARED = 2
 WIN_MAX_FP_DF = 32
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition compute-dense inputs across the cluster — but ONLY
-    when the input is under-partitioned.
-
-    Small-file sources (one parquet split) otherwise pin the whole
-    shingle/hash pipeline to a single task — at any scale, CPU-heavy
-    per-row stages should run at cluster parallelism, not input-split
-    parallelism. One cheap round-robin shuffle of the narrow doc
-    projection buys full-width execution of everything downstream.
-
-    WIDTH-CONDITIONAL (VERDICT r14 #1): a 100 TB corpus scan already
-    has thousands of splits — an unconditional repartition there is a
-    pure full-corpus round-robin shuffle WRITE of the text payload in
-    front of a projection (AQE only coalesces the post-shuffle READ;
-    the write happens regardless). Two branches, gated by a zero-cost
-    session signal (largest source loaded through the scan cache):
-
-    - small corpus (every source below the probe threshold, default
-      1 GiB): spread unconditionally — the input is certainly narrow,
-      and even a mistaken shuffle moves <1 GiB. This keeps the bench
-      plans (and their per-pass cost) exactly as before: no per-frame
-      probe.
-    - lake corpus (or unknowable source size, e.g. s3://): pay one
-      driver-only JVM planning probe (~50 ms, nothing against
-      lake-scale queries) for the frame's EXACT partition count and
-      skip the shuffle when already at or above cluster width.
-
-    The threshold is an env knob (SPARK_GRAFT_SPREAD_PROBE_ABOVE_BYTES)
-    so a deployment can force either branch."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    import os
-
-    from riemann_spark import schema as _schema
-
-    thresh = int(
-        os.environ.get("SPARK_GRAFT_SPREAD_PROBE_ABOVE_BYTES", str(1 << 30))
-    )
-    if _schema.max_source_bytes(df.sparkSession) >= thresh:
-        try:
-            # JVM-side planning only: no Python-serializer codegen
-            # (df.rdd would compile one per call)
-            n = df._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:
-            n = 0
-        if n >= target:
-            return df
-    return df.repartition(target)
 
 
 def _gram_array(col: str | Column, k: int) -> Column:
@@ -126,7 +78,7 @@ def shingles(col: str | Column = "text", k: int = 3) -> Column:
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup groups: fingerprint → (n_docs, canonical id)."""
     return (
-        _spread(df).select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
+        spread_for_python(df).select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -136,7 +88,7 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 
 
 def _shingle_table(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    return _spread(df).select(
+    return spread_for_python(df).select(
         F.col(id_col).alias("doc"), F.explode(shingles(text_col, k)).alias("shingle")
     )
 
@@ -675,7 +627,7 @@ def simhash_buckets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text
     (minhash_verified_pairs / edit-distance tier) on the flagged
     pairs; dedup_tier_agreement is the report quantifying this
     over-generation against the exact and MinHash tiers."""
-    t = simhash_table(_spread(df), id_col, text_col)
+    t = simhash_table(spread_for_python(df), id_col, text_col)
     sh = F.col("simhash")
     return t.select(
         "doc",
@@ -712,7 +664,7 @@ def simhash64_bands(
     sf0.01 ε-corpus: ~22.1k candidates vs 28 exact pairs — the token
     sets really do overlap). Gate candidates through a true-similarity
     verifier; dedup_tier_agreement quantifies the over-generation."""
-    toks = _spread(df).select(
+    toks = spread_for_python(df).select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(tokens(text_col))).alias("t"),
     )
@@ -798,26 +750,6 @@ def delta_components(
     actions on the fast path regardless of graph shape — vs
     3 rounds x (checkpoint + signature) for the generic loop on the
     same input."""
-    global last_delta_fast_path
-    # same scoped AQE posture as the generic loop: the merge-graph
-    # shuffles are batch-sized, so size them by bytes while the fast
-    # path materializes (restored below; the returned frame evaluates
-    # under the caller's conf). NOTE: conf set/restore is session-
-    # global — concurrent queries on a shared SparkSession can observe
-    # (or clobber) the flag mid-flight. The bench/correctness drivers
-    # are sequential; parallel consumers should serialize calls into
-    # the CC family or pin the flag themselves (ADVICE r13 #5).
-    _sess = pairs.sparkSession
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    _pf_prev = _sess.conf.get(_PF, "true")
-    _sess.conf.set(_PF, "false")
-    try:
-        return _delta_components(prior, pairs, src, dst, hops)
-    finally:
-        _sess.conf.set(_PF, _pf_prev)
-
-
-def _delta_components(prior, pairs, src, dst, hops):
     global last_delta_fast_path
     lab1 = prior.select(
         F.col("doc").alias(src), F.col("cluster").alias("__c1")
@@ -953,6 +885,8 @@ def connected_components(
     lineage truncation (on a cluster with an unreliable-executor
     profile, swap for ``checkpoint()`` to a reliable dir).
     """
+    global last_cc_rounds
+
     def _sig(df: DataFrame) -> tuple:
         # one shuffle-free job: (count, hash-sum) edge-set signature,
         # used as a cheap no-change screen before the exact check
@@ -963,34 +897,12 @@ def connected_components(
         ).collect()[0]
         return row["n"], row["h"]
 
-    # The loop's shuffles shrink with the contracting edge set; let
-    # AQE size them by BYTES for the loop's duration (parallelismFirst
-    # keeps tiny shuffles at the full session width — measured 4.1s ->
-    # 3.1s on a warm-start graph; scoped here, NOT session-global,
-    # because the r12 global experiment was a wash on scan-heavy
-    # queries). Restored in the finally below; the returned frame's
-    # own evaluation happens under the caller's conf. NOTE: session-
-    # global conf — assumes one query at a time on this SparkSession
-    # (true for the sequential bench/correctness drivers); parallel
-    # consumers must serialize or pin the flag (ADVICE r13 #5).
-    _sess = pairs.sparkSession
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    _pf_prev = _sess.conf.get(_PF, "true")
-    _sess.conf.set(_PF, "false")
-    try:
-        return _cc_loop(pairs, src, dst, max_rounds, _sig)
-    finally:
-        _sess.conf.set(_PF, _pf_prev)
-
-
-def _cc_loop(pairs, src, dst, max_rounds, _sig):
     e = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
-    global last_cc_rounds
     nodes = e.select("u").union(e.select("v")).distinct().persist()
     nodes.count()
     prev_sig = _sig(e)
@@ -1104,7 +1016,7 @@ def duplicated_spans(
     shuffles (gram, then doc), both map-side combinable at the rollup.
     No posting-list join-back, so a hot gram costs its row count, not
     its square."""
-    g = _spread(df).select(
+    g = spread_for_python(df).select(
         F.col(id_col).alias("doc"),
         F.posexplode(_gram_array(text_col, k)).alias("pos", "gram"),
     )

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from riemann_spark.operators.skew import spread_for_python as _spread
+from riemann_spark.operators.skew import spread_for_python
 
 # Any malformed media payload dead-letters to a NULL row instead of
 # crashing the executor task: the pure-stdlib codecs surface corruption
@@ -104,7 +104,7 @@ def decode_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
                 }
             )
 
-    return _spread(df.select(id_col, "media", "content")).mapInPandas(run, FEATURE_SCHEMA)
+    return spread_for_python(df.select(id_col, "media", "content")).mapInPandas(run, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -134,7 +134,7 @@ def resize_images(df: DataFrame, width: int, height: int, id_col: str = "media_i
                 }
             )
 
-    return _spread(df.select(id_col, "content")).mapInPandas(run, RESIZE_SCHEMA)
+    return spread_for_python(df.select(id_col, "content")).mapInPandas(run, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -172,7 +172,7 @@ def sample_frames(df: DataFrame, every_ms: int, id_col: str = "media_id") -> Dat
                     frames.append(hashlib.md5(seed.encode()).digest())
             yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
 
-    return _spread(df.select(id_col, "media", "content")).mapInPandas(run, FRAME_SCHEMA)
+    return spread_for_python(df.select(id_col, "media", "content")).mapInPandas(run, FRAME_SCHEMA)
 
 
 REAL_FEATURE_SCHEMA = StructType(
@@ -244,7 +244,7 @@ def real_decode_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
                     rows.append([int(mid), None, None, None, None, 0, None, None, None])
             yield pd.DataFrame(rows, columns=[f.name for f in REAL_FEATURE_SCHEMA.fields])
 
-    return _spread(df.select(id_col, "content")).mapInPandas(run, REAL_FEATURE_SCHEMA)
+    return spread_for_python(df.select(id_col, "content")).mapInPandas(run, REAL_FEATURE_SCHEMA)
 
 
 def synthetic_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -282,7 +282,7 @@ def synthetic_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def real_video_frames(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -318,7 +318,7 @@ def real_video_frames(df: DataFrame, id_col: str = "media_id") -> DataFrame:
                     rows.append([int(mid), None, None, None, None])
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    return _spread(df.select(id_col, "content")).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col, "content")).mapInPandas(run, schema)
 
 
 def synthetic_avi(df: DataFrame, id_col: str = "doc_id", n_frames: int = 3) -> DataFrame:
@@ -349,7 +349,7 @@ def synthetic_avi(df: DataFrame, id_col: str = "doc_id", n_frames: int = 3) -> D
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def synthetic_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -380,7 +380,7 @@ def synthetic_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def make_media_frame(df: DataFrame, payload_col: str, kind: str, id_col: str) -> DataFrame:
@@ -550,7 +550,7 @@ def synthetic_avi_scenes(
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def real_scene_cuts(
@@ -596,7 +596,7 @@ def real_scene_cuts(
                     rows.append([int(mid), None, None])
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    return _spread(df.select(id_col, "content")).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col, "content")).mapInPandas(run, schema)
 
 
 #: VAD fixture layout: 8 frames × 128 samples @ 8 kHz; frame f of doc d
@@ -635,7 +635,7 @@ def synthetic_wav_vad(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def real_vad_segments(
@@ -695,7 +695,7 @@ def real_vad_segments(
                     prev_active = active
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    return _spread(df.select(id_col, "content")).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col, "content")).mapInPandas(run, schema)
 
 
 def synthetic_image_grid(
@@ -743,7 +743,7 @@ def synthetic_image_grid(
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def image_dhash_bands(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -839,7 +839,7 @@ def synthetic_wav_groups(
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
-    return _spread(df.select(id_col)).mapInPandas(run, schema)
+    return spread_for_python(df.select(id_col)).mapInPandas(run, schema)
 
 
 def audio_envelope_fp(df: DataFrame, id_col: str = "media_id") -> DataFrame:

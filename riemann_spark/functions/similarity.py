@@ -21,6 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from riemann_spark.operators.skew import spread_for_python
+
 
 def _dots_sql(a_sql: str, b_sql: str) -> str:
     """The _dots fold as a SQL string — parses to the identical
@@ -55,28 +57,6 @@ def norm(a: Column | str) -> Column:
 
 def cosine(a: Column | str, b: Column | str) -> Column:
     return _dots(a, b) / (norm(a) * norm(b))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin a compute-dense input to cluster width before a
-    row-vs-centroid fold (dedup._spread's rationale): a single-split
-    parquet source otherwise pins the |rows| x cells cosine stage to
-    one task — at the x20 probe's derived 4096-cell geometry that was
-    a 25-minute single-core stall. One cheap shuffle of the narrow
-    projection; every assignment is row-local with explicit
-    tie-breaks, so values are partitioning-independent.
-
-    WIDTH-CONDITIONAL (VERDICT r14 #1, mirrors dedup._spread — see its
-    docstring for the two-branch design): skipped when the plan is
-    already at or above cluster width — at lake scale the scan has
-    thousands of splits and the round-robin would be a pure extra
-    shuffle write of the embedding payload. The per-frame width probe
-    only runs when the session has loaded a lake-sized source (or one
-    whose size is unknowable); small corpora spread unconditionally,
-    probe-free."""
-    from riemann_spark.functions.dedup import _spread as _dedup_spread
-
-    return _dedup_spread(df)
 
 
 def brute_force_topk(
@@ -488,7 +468,7 @@ def ivf_topk(
 
     def assign(df: DataFrame, idc: str, vecc: str, keep: int = 1) -> DataFrame:
         nc = vecc[0] + "_n"  # q_n / n_n, precomputed by the caller
-        scored = _spread(df).crossJoin(cents).withColumn(
+        scored = spread_for_python(df).crossJoin(cents).withColumn(
             "c_cos", _dots(f"`{vecc}`", "c_vec") / (F.col(nc) * F.col("c_n"))
         )
         w = Window.partitionBy(idc).orderBy(F.desc("c_cos"), F.col("cell"))
@@ -550,7 +530,7 @@ def ivf_cell_assignments(
         )
     )
     scored = (
-        _spread(
+        spread_for_python(
             corpus.select(
                 F.col(id_col).alias("n_id"),
                 F.col(vec_col).alias("n_vec"),
@@ -956,8 +936,8 @@ def _ivf_assign(cents, df, keep, id_col, vec_col, out_id):
     ivf_topk's geometry.
 
     The row-vs-centroid fold is the compute-dense stage (|df| × cells
-    64-element folds) — _spread first (see its docstring)."""
-    src = _spread(
+    64-element folds) — spread_for_python first (see its docstring)."""
+    src = spread_for_python(
         df.select(
             F.col(id_col).alias(out_id),
             F.col(vec_col).cast("array<double>").alias("v"),
@@ -1062,8 +1042,8 @@ def ivf_assign_two_level(
     not assumed (ann_recall_ivfpq at every SF + the x20 probe).
     Candidate rows shuffle NARROW ((id, cell, cos) — vectors join
     back by id after the argmax), supers/groups broadcast
-    model-sized, and the dense folds ride _spread like every other
-    corpus x centroid stage.
+    model-sized, and the dense folds ride spread_for_python like every
+    other corpus x centroid stage.
 
     ``sfan=None`` derives the fan from the geometry (ivf_build_fan):
     below IVF_2L_MIN_CELLS it equals the super count, and the
@@ -1105,7 +1085,7 @@ def ivf_assign_two_level(
         "cell", "c_vec", "c_n", F.col("cell").alias("grp")
     )
     gt = F.broadcast(head.unionByName(tail))
-    src = _spread(
+    src = spread_for_python(
         df.select(
             F.col(id_col).alias(out_id),
             F.col(vec_col).cast("array<double>").alias("v"),
@@ -1598,7 +1578,7 @@ def ivfpq_train_codebook(
             out_id="n_id",
         ).select(rid, "rv")
     else:
-        c = _spread(
+        c = spread_for_python(
             corpus.select(
                 F.col(id_col).alias("n_id"),
                 F.col(vec_col).cast("array<double>").alias("n_vec"),

@@ -93,12 +93,10 @@ def index_point_get(spark: SparkSession, table: str, host: str, service: str) ->
     when a downstream operator wants the hash distribution, and a point
     lookup has none — with the rule active the scan silently reads all
     n buckets (verified on 4.1: ``Bucketed: false (disabled by query
-    planner)``). Point-get workloads should run with it disabled; we
-    set it here because this IS the point-get entry point.
+    planner)``). ``get_spark`` turns it off for the whole session.
     """
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     return spark.table(table).filter(
         (F.col("host") == F.lit(host)) & (F.col("service") == F.lit(service))
     )

@@ -57,24 +57,32 @@ def salted_agg(
 
 
 def spread_for_python(df: DataFrame) -> DataFrame:
-    """Widen under-partitioned input ahead of a Python-bound stage.
+    """Widen an under-partitioned frame to cluster width ahead of a
+    CPU-dense per-row stage (a ``mapInPandas`` codec, a regex or md5
+    fold, a row-vs-centroid cosine), which otherwise runs at its
+    input's width: a single-split parquet source pins it to one task.
 
-    ``mapInPandas`` parallelism equals the input partition count: a
-    single-file local read (1 split) runs the whole Python codec on
-    one core while 31 idle. At cluster scale the source has far more
-    splits than cores and the spread is skipped. The shuffle moves
-    only the columns the stage selected (prune before calling).
+    The decision reads the frame's own physical plan, JVM-side, and
+    starts no job:
 
-    r15: delegates to ``dedup._spread``'s two-branch width probe —
-    the old ``df.rdd.getNumPartitions()`` probe converted the plan
-    through the Python-serializer path and cost a profiled ~0.26s of
-    py4j/codegen PER CALL (×2 per codec roundtrip build); the shared
-    branch probes partition count JVM-side, and only when the session
-    has seen a lake-sized source at all (small corpora spread
-    probe-free — a mistaken shuffle there moves <1 GiB by
-    construction)."""
+    - a streaming frame is returned unchanged (micro-batch width is
+      the source's concern);
+    - an adaptive plan has an exchange and is spread: its width is
+      only known once AQE has run the upstream shuffle, so probing it
+      would execute that shuffle for a plan that is then discarded;
+    - otherwise the plan's partition count is compared with
+      ``defaultParallelism``, and a frame already that wide comes back
+      as is (a lake-scale scan, a ``createDataFrame`` frame).
+
+    Known limit: a file scan's partitions are byte splits, not row
+    groups. A 10.8 MB parquet file written as one row group reads as
+    3 partitions with every row in one of them. The shuffle moves only
+    the columns the caller selected (prune before calling)."""
     if df.isStreaming:
-        return df  # micro-batch partitioning is the source's concern
-    from riemann_spark.functions.dedup import _spread
-
-    return _spread(df)
+        return df
+    width = df.sparkSession.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().getClass().getSimpleName()
+    if plan != "AdaptiveSparkPlanExec" and qe.toRdd().getNumPartitions() >= width:
+        return df
+    return df.repartition(width)

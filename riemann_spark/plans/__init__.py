@@ -121,200 +121,6 @@ _GATE_PRIORITY = [
     "window_folds",
 ]
 
-_ROUND13_WINDOW_RETIRED = [
-    # ---- retired ROUND-13 WINDOW + staged r14 front (historical record;
-    # all 50 gated green in CORRECTNESS_r13) -----------------------------
-    "moving_event_window",
-    "ngram_novelty",
-    "packing_efficiency",
-    "percentiles_day",
-    "perplexity_buckets",
-    "psi_drift",
-    "runs3",
-    "soft_dedup_weights",
-    "source_overlap_matrix",
-    "span_corruption",
-    "streaming_blocklist_gate",
-    "streaming_bottomk_drained",
-    "streaming_contamination_gate",
-    "streaming_embedding_gate",
-    "streaming_pii_gate",
-    "streaming_quality_gate",
-    "video_scene_cuts",
-    "vocab_growth",
-    "zipf_slope",
-    "streaming_contamination_writeback_drained",
-    "ann_recall_ivfpq",
-    "knn_ivfpq",
-    "knn_ivfpq_trained",
-    "knn_ivfpq_rerank",
-    "incremental_cc_from_table",
-    "incremental_cc_warmstart",
-    "ann_gate_report",
-    "apdex",
-    "bm25_topk",
-    "burst_interval_join",
-    "clock_skew",
-    "cohort_retention",
-    "containment_dedup",
-    "corpus_cube",
-    "coverage_gaps",
-    "curriculum_order",
-    "dedup_threshold_sweep",
-    "domain_pagerank",
-    "domain_quality_rollup",
-    "dup_rate_by_source",
-    "duplicate_span_removal",
-    "edit_distance_verify",
-    "embedding_outliers",
-    "embedding_pca1",
-    "event_funnel",
-    "fill_in",
-    "funnel_latency",
-    "greedy_pack_tokens",
-    "hits_scores",
-    "incremental_dedup",
-    "ivfpq_geometry_report",
-    "image_resize_real",
-    "kl_divergence_sources",
-    "per_source_quantile_filter",
-    "predict_linear",
-    "project2",
-    "quality_repetition_corr",
-    "rrf_fusion",
-    "scd2_state_history",
-    "stable_2h",
-    "streaming_ann_gate",
-    "streaming_drift_gate",
-    "streaming_funnel_drained",
-    "streaming_scd2_drained",
-    "streaming_stable_drained",
-    "streaming_token_budget_drained",
-    "streaming_url_gate_drained",
-    "throttle",
-    "token_pack_efficiency",
-    "top10",
-    "topic_mixture",
-    "url_dedup",
-    "watermark_sizing_report",
-    "weighted_sample",
-    "whitened_semantic_dedup",
-    "winnowing_keeplist",
-    "zorder_layout",
-]
-
-_ROUND12_WINDOW_RETIRED = [
-    # ---- retired ROUND-12 WINDOW (kept for the historical record; all
-    # 50 gated green in CORRECTNESS_r12): the 12 remaining r05-stale
-    # rows, the 7 round-11 additions, 31 r06 rows -------------------------
-    "streaming_rate_closed",
-    "streaming_slo_burn_drained",
-    "streaming_top_drained",
-    "tagged_filter",
-    "text_features",
-    "top_suppliers_per_part",
-    "tpch_q11",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "transform_fields",
-    "where_filter",
-    "knn_ivfpq_rerank",
-    "band_index_compaction",
-    "contamination_from_table",
-    "streaming_index_drift_drained",
-    "knn_ivfpq_trained",
-    "streaming_contamination_gate_drained",
-    "eval_index_writeback",
-    "dedup_recall_report",
-    "embedding_contamination",
-    "winnowing_fingerprints",
-    "winnowing_overlap",
-    "ann_truncation_report",
-    "audio_envelope_dedup",
-    "audio_vad_segments",
-    "bigram_lm_score",
-    "blocklist_gate",
-    "boilerplate_removal",
-    "bottomk_sample",
-    "canonical_dedup",
-    "changed_state",
-    "char_entropy",
-    "chunk_sliding_window",
-    "classifier_calibration",
-    "cluster_aware_split",
-    "contamination_gate_report",
-    "counter_running",
-    "ddt",
-    "dedup_cluster_representatives",
-    "dedup_clusters_verified",
-    "ewma",
-    "fim_transform",
-    "fixed_event_window",
-    "fuzzy_decontamination",
-    "greedy_pack_bins",
-    "image_dhash_keeplist",
-    "image_dhash_neardup",
-    "length_bucket_batches",
-    "mixture_epoch_plan",
-]
-
-_ROUND11_WINDOW_RETIRED = [
-    # ---- retired ROUND-11 WINDOW (kept for the historical record; all
-    # 50 gated green in CORRECTNESS_r11) ---------------------------------
-    # -- (a) the 12 never-externally-gated round-10 additions: -----------
-    "knn_pq_from_table",
-    "pq_code_maintenance",
-    "dedup_tier_agreement",
-    "classifier_uncertainty_sampling",
-    "streaming_neardup_probe_drained",
-    "knn_ivfpq",
-    "mixture_anneal_schedule",
-    "ann_recall_ivfpq",
-    "simhash64_candidates",
-    "tokenizer_fertility_drift",
-    "streaming_fertility_gate_drained",
-    "contamination_after_dedup",
-    # -- (b) first 38 of the 50 r05-hashed rows: --------------------------
-    "bpe_tokenize",
-    "curation_funnel",
-    "customers_without_orders",
-    "dedup_embedding_keeplist",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_token_savings",
-    "dsir_selection",
-    "graphite_dead_letter",
-    "holt_forecast",
-    "index_expired",
-    "index_latest",
-    "index_search",
-    "influx_line_roundtrip",
-    "knn_hamming",
-    "knn_ivf_kmeans",
-    "lang_id",
-    "mix_temperature",
-    "multimodal_features",
-    "prometheus_rw_roundtrip",
-    "prometheus_text_roundtrip",
-    "quality_score",
-    "rate_per_hour",
-    "salted_agg_by_state",
-    "sample_per_source",
-    "segment_dedup_keep_first",
-    "shuffle_shards",
-    "split_route",
-    "streaming_anomaly_drained",
-    "streaming_batch_drained",
-    "streaming_coalesce_drained",
-    "streaming_dedup_minhash_drained",
-    "streaming_ewma_halflife",
-    "streaming_fill_in_last_drained",
-    "streaming_heavy_hitters_closed",
-    "streaming_moving_time_drained",
-    "streaming_percentiles_histogram_closed",
-    "streaming_project_drained",
-]
 
 def _reorder(d: dict) -> dict:
     prio = [n for n in _GATE_PRIORITY if n in d]

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from riemann_spark.operators import analytics, index, stateless, windows
 from riemann_spark.operators.folds import _d, dmean, dstddev_pop, dsum, msum
+from riemann_spark.operators.skew import spread_for_python
 from riemann_spark.query import parse, to_sql
 from riemann_spark.schema import (
     EVENTS_NORM_SQL,
@@ -36,29 +37,7 @@ def q(name: str, oracle: str | None = None):
     def deco(fn):
         if name in QUERIES:  # a silent overwrite would shadow a query
             raise ValueError(f"duplicate catalog query name: {name}")
-
-        def wrapped(spark, sf, _fn=fn):
-            # Every query runs adaptive, and says so up front: builders
-            # that read stored state directly (spark.read.parquet,
-            # checkpointed loops) never call load_table first, so a
-            # stale AQE-off on the session (an interrupted caller, a
-            # user toggle) would silently deoptimize their internal
-            # actions. The per-frame AQE-off scope that briefly lived
-            # here (r14) was reverted with full-bench numbers — see
-            # OPTIMIZATION_r14.md §14: sparkPlan() precedes
-            # EnsureRequirements, so its Exchange count sees only
-            # explicit repartitions, and the packed-bench A/B showed
-            # no light-row win and heavy stored-state regressions.
-            from riemann_spark import schema as _schema
-
-            _schema.set_aqe(spark, True)
-            df = _fn(spark, sf)
-            return df
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        wrapped.__wrapped__ = fn
-        QUERIES[name] = wrapped
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -822,17 +801,15 @@ def tpch_q1(spark: SparkSession, sf: str) -> DataFrame:
     """Pricing-summary aggregation (TPC-H Q1 shape): the canonical
     scan→partial-agg→shuffle-one-row-per-group plan; linear at 100 TB.
 
-    _spread (r15, width-conditional): the 8 msum round/cast chains are
-    ~24 integer ops per row — on the single-split fixture the fused
+    spread_for_python: the 8 msum round/cast chains are ~24 integer
+    ops per row — on the single-split fixture the fused
     scan+partial-agg ran one core while 31 idled (probe 1.22 -> 0.84s).
     Spread AFTER the filter, on the 6 needed columns only (pruning and
     the shipdate pushdown stay at the scan); the partial sums are
     exact-integer so grouping is partitioning-independent. A lake-wide
     scan skips the round-robin."""
-    from riemann_spark.functions.dedup import _spread
-
     li = load_table(spark, sf, "lineitem")
-    f = _spread(
+    f = spread_for_python(
         li.filter(
             F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp")
         ).select(
@@ -1354,11 +1331,9 @@ def influx_line_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_events(spark, sf)
     # the parser is a per-row regex/string pipeline — round-robin the
     # one-string-column lines frame so it runs at cluster width instead
-    # of input-split width (r15; width-conditional, so a lake-scale
-    # scan skips the shuffle). Measured 1.72 -> 0.60s at sf0.1.
-    from riemann_spark.functions.dedup import _spread
-
-    lines = _spread(events_to_influx_lines(ev))
+    # of input-split width (skipped when the frame is already that
+    # wide). Measured 1.72 -> 0.60s at sf0.1.
+    lines = spread_for_python(events_to_influx_lines(ev))
     return influx_lines_to_events(lines).select("host", "service", "metric", "time")
 
 
@@ -1391,9 +1366,7 @@ def prometheus_text_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_events(spark, sf)
     # see influx_line_roundtrip: spread the one-column lines frame so
     # the label-splitter regex pipeline runs cluster-wide
-    from riemann_spark.functions.dedup import _spread
-
-    lines = _spread(events_to_prometheus_text(ev))
+    lines = spread_for_python(events_to_prometheus_text(ev))
     s = prometheus_text_to_samples(lines)
     return s.select(
         "name",
@@ -1523,9 +1496,7 @@ def json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_events(spark, sf)
     # see influx_line_roundtrip: spread the JSON strings before the
     # from_json parse so Jackson runs cluster-wide
-    from riemann_spark.functions.dedup import _spread
-
-    back = events_from_json(_spread(events_to_json(ev)), "value")
+    back = events_from_json(spread_for_python(events_to_json(ev)), "value")
     return back.select(
         "host",
         "service",

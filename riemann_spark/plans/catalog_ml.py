@@ -9,13 +9,13 @@ division.
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from riemann_spark.functions import dedup, similarity, text
+from riemann_spark.operators.skew import spread_for_python
 from riemann_spark.plans.catalog import ORACLES, QUERIES, q
 from riemann_spark.schema import load_parquet, load_table, parquet_schema
 
@@ -45,12 +45,12 @@ FROM t""",
 def text_features(spark: SparkSession, sf: str) -> DataFrame:
     """Quality-signal feature extraction: token counts, mean token
     length, punctuation and stopword ratios — pure projections, fuse
-    with the scan; zero KEYED shuffles at any scale. _spread (r15,
-    width-conditional): the regex/tokenize chains are the per-row
-    cost — run them at cluster width, not input-split width; a
-    lake-scale scan is already wide and skips the round-robin.
+    with the scan; zero KEYED shuffles at any scale. spread_for_python:
+    the regex/tokenize chains are the per-row cost — run them at
+    cluster width, not input-split width; a lake-scale scan is already
+    wide and skips the round-robin.
     Probe 0.41 -> 0.24s."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     return d.select(
@@ -175,31 +175,6 @@ def dedup_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     shingle sets."""
     d = load_table(spark, sf, "documents")
     return dedup.ngram_jaccard_pairs(d, 0.5, max_shingle_df=_SHINGLE_CAP)
-
-
-@contextlib.contextmanager
-def _batch_scope(spark: SparkSession):
-    """Scope AQE's byte-sized shuffle coalescing over a BATCH-SIZED
-    query body (the incremental/warm-start lane, whose every shuffle
-    is O(arrival batch)): parallelismFirst keeps tiny shuffles at the
-    full session width, which is pure scheduling overhead here —
-    measured ~25% of the warm-start rows' wall time. Scoped, NOT
-    session-global (the r12 global experiment was a wash on
-    scan-heavy queries); only actions taken INSIDE the scope (state
-    builds, checkpoints, model-sized collects) see it.
-
-    NOTE: the set/restore pair mutates session-global conf — it
-    assumes one query at a time on this SparkSession (true for the
-    sequential bench/correctness drivers). Parallel consumers must
-    serialize entries into this scope (and the dedup CC family, which
-    shares the posture) or pin the flag themselves (ADVICE r13 #5)."""
-    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 _N_HASHES, _BAND = 8, 2
@@ -933,11 +908,11 @@ def token_stats(spark: SparkSession, sf: str) -> DataFrame:
     hash) in one pass — the per-document bookkeeping row a training
     pipeline keeps for every shard. Pure projections, zero KEYED
     shuffle; all arithmetic exact-integer so the oracle is
-    bit-deterministic. _spread (r15, width-conditional): the BPE
+    bit-deterministic. spread_for_python: the BPE
     regex + per-token md5 fold dominates — cluster width instead of
     input-split width (probe 0.57 -> 0.23s); skipped on a lake-wide
     scan."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     return d.select(
@@ -1346,7 +1321,7 @@ def corpus_profile(spark: SparkSession, sf: str) -> DataFrame:
     from riemann_spark.functions import sketches
 
     d = load_table(spark, sf, "documents")
-    sh = dedup._spread(d).select(
+    sh = spread_for_python(d).select(
         F.explode(dedup.shingles("text", 3)).alias("shingle")
     )
     sh = sh.persist()
@@ -1432,11 +1407,11 @@ def gopher_gates(spark: SparkSession, sf: str) -> DataFrame:
     minimum stopword evidence — per-doc booleans plus the combined
     gate. Pure projections over one tokenization, zero shuffle;
     thresholds fixture-calibrated where the paper's assume web-scale
-    docs (word floor 20 vs 50). _spread (r15, width-conditional): one
+    docs (word floor 20 vs 50). spread_for_python: one
     tokenization + five per-token scans at cluster width (probe
     0.49 -> 0.31s); lake-wide scans skip it."""
     return _gopher_flags(
-        dedup._spread(
+        spread_for_python(
             load_table(spark, sf, "documents").select("doc_id", "text")
         )
     )
@@ -1743,11 +1718,11 @@ def repetition_filter(spark: SparkSession, sf: str) -> DataFrame:
     duplicate-word fraction + most-covering-2-gram char fraction, the
     standard repetition gate before pre-training. One 2-gram explode
     with map-side partial counts; output is one row per doc.
-    _spread (r15, width-conditional): the per-row sorted-gram
+    spread_for_python: the per-row sorted-gram
     run-length fold is the cost — cluster width instead of
     input-split width (probe 0.74 -> 0.31s); lake-wide scans skip
     the round-robin."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     return text.repetition_metrics(d)
@@ -1921,7 +1896,7 @@ def contamination_bloom(spark: SparkSession, sf: str) -> DataFrame:
     # (the project-collapse trap streaming_contamination_gate documents;
     # the plan pin asserts ONE md5 site)
     hits = (
-        dedup._spread(d.filter(F.col("source") != "src0").select("doc_id", "text"))
+        spread_for_python(d.filter(F.col("source") != "src0").select("doc_id", "text"))
         .select(
             F.col("doc_id").alias("doc"),
             F.explode(
@@ -2044,7 +2019,7 @@ def contamination_gate_report(spark: SparkSession, sf: str) -> DataFrame:
     per source. The ops view before turning the gate on: a source
     with a 40% gate rate is an eval-set mirror, not a data source.
     One projection + one key-cardinality groupBy; the only wide flow
-    is dedup._spread's round-robin of the narrow (source, text)
+    is spread_for_python's round-robin of the narrow (source, text)
     projection so the md5-probe stage runs at cluster width instead
     of input-split width (r14 — a 594 KB single-split source pinned
     the whole probe to one task); the probe output itself shuffles
@@ -2054,7 +2029,7 @@ def contamination_gate_report(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     dense = _bloom_gate_state(spark, sf)
     flagged = (
-        dedup._spread(docs.filter(F.col("source") != "src0").select("source", "text"))
+        spread_for_python(docs.filter(F.col("source") != "src0").select("source", "text"))
         .select("source", dedup.shingles("text", 4).alias("__sh"))
         .select(
             "source",
@@ -2133,7 +2108,7 @@ def distinct_ngrams_kmv(spark: SparkSession, sf: str) -> DataFrame:
     from riemann_spark.functions import sketches
 
     d = load_table(spark, sf, "documents")
-    sh = dedup._spread(d).select(F.explode(dedup.shingles("text", 3)).alias("shingle"))
+    sh = spread_for_python(d).select(F.explode(dedup.shingles("text", 3)).alias("shingle"))
     return sketches.kmv_estimate(sh, F.col("shingle"), 1024)
 
 
@@ -2178,7 +2153,7 @@ def distinct_ngrams_hll(spark: SparkSession, sf: str) -> DataFrame:
     from riemann_spark.functions import sketches
 
     d = load_table(spark, sf, "documents")
-    sh = dedup._spread(d).select(F.explode(dedup.shingles("text", 3)).alias("shingle"))
+    sh = spread_for_python(d).select(F.explode(dedup.shingles("text", 3)).alias("shingle"))
     return sketches.hll_estimate(sh, F.col("shingle"))
 
 
@@ -2212,10 +2187,10 @@ def doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     the primitive incremental/windowed fingerprinting builds on) and
     the order-insensitive md5 content fingerprint dedup keys on. Pure
     per-row projection: no keyed shuffle, whole-stage codegen, no UDF —
-    at 100 TB this is a single map pass. _spread (r15,
-    width-conditional): per-token md5 folds at cluster width (probe
-    0.42 -> 0.19s); skipped on a lake-wide scan."""
-    d = dedup._spread(
+    at 100 TB this is a single map pass. spread_for_python:
+    per-token md5 folds at cluster width (probe 0.42 -> 0.19s);
+    skipped on a lake-wide scan."""
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     return d.select(
@@ -2587,10 +2562,10 @@ def quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
     shuffle, zero UDF; trained weights drop in without a plan change.
     Both engines fold the per-doc sum sequentially, so the double is
     bit-identical."""
-    # _spread (r15, width-conditional): the fold is 2 md5/token — run
+    # spread_for_python: the fold is 2 md5/token — run
     # it at cluster width, not input-split width (probe 0.71 -> 0.25s);
     # skipped when the scan is already wide (lake scale)
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     return d.select(
@@ -2639,13 +2614,13 @@ def curation_pipeline_cls(spark: SparkSession, sf: str) -> DataFrame:
     them; the classifier gate is a pure projection (no shuffle added),
     so the pipeline still pays only segment_dedup's two shuffles."""
     d = load_table(spark, sf, "documents")
-    # _spread: the classifier fold is 2 md5/token — run it at cluster
-    # width, not input-split width (one 594 KB split = one task). The
+    # spread_for_python: the classifier fold is 2 md5/token — run it
+    # at cluster width, not input-split width (one 594 KB split = one task). The
     # explode-of-one-element barrier keeps the score > 0 filter from
     # collapsing into the projection and evaluating the fold TWICE
     # (Filter + Project both carried the full aggregate in the r14
     # plan dump) — same trap as contamination_bloom (§16).
-    scored = dedup._spread(d.select("doc_id", "text")).select(
+    scored = spread_for_python(d.select("doc_id", "text")).select(
         "doc_id",
         "text",
         F.explode(
@@ -3308,26 +3283,19 @@ def ann_recall_report(spark: SparkSession, sf: str) -> DataFrame:
     per_pair = ranked.groupBy("q_id", "n_id").agg(
         F.collect_set("method").alias("ms")
     )
-    # _batch_scope (r15): every shuffle in this audit is model-sized
-    # (8 queries × candidate sets), so byte-sized AQE coalescing —
-    # the incremental-CC lane's documented posture — applies; at
-    # session width the ~6 tiny exchanges each schedule full-width
-    # task sets. A/B min-of-3: 3.82 -> 2.41s. Scope covers exactly
-    # the collect (all the query's compute); restored before return.
-    with _batch_scope(spark):
-        hit_rows = {
-            r["method"]: (r["hits"], r["n_in_tier"])
-            for r in per_pair.select(
-                F.explode("ms").alias("method"),
-                F.array_contains("ms", "__bf").cast("int").alias("bf_hit"),
-            )
-            .groupBy("method")
-            .agg(
-                F.sum("bf_hit").alias("hits"),
-                F.count(F.lit(1)).alias("n_in_tier"),
-            )
-            .collect()
-        }
+    hit_rows = {
+        r["method"]: (r["hits"], r["n_in_tier"])
+        for r in per_pair.select(
+            F.explode("ms").alias("method"),
+            F.array_contains("ms", "__bf").cast("int").alias("bf_hit"),
+        )
+        .groupBy("method")
+        .agg(
+            F.sum("bf_hit").alias("hits"),
+            F.count(F.lit(1)).alias("n_in_tier"),
+        )
+        .collect()
+    }
     total = hit_rows["__bf"][1]
     fracs = {
         "lsh": _lsh_scan(0),
@@ -4780,10 +4748,10 @@ def char_entropy(spark: SparkSession, sf: str) -> DataFrame:
     sorted before the p·ln p fold so both engines fold the identical
     IEEE sequence; ideal_bytes (the entropy-coding lower bound)
     derives from the round-6 value so its ceil is deterministic.
-    _spread (r14): the per-doc fold is O(distinct_chars × n_chars) —
+    spread_for_python: the per-doc fold is O(distinct_chars × n_chars) —
     cluster-width execution, not one task per 594 KB parquet split."""
     d = load_table(spark, sf, "documents")
-    return text.char_entropy(dedup._spread(d.select("doc_id", "text")))
+    return text.char_entropy(spread_for_python(d.select("doc_id", "text")))
 
 
 _TRUNC_DIMS = (8, 16, 32)
@@ -5977,10 +5945,10 @@ def span_corruption_q(spark: SparkSession, sf: str) -> DataFrame:
     target (15% corruption). Deterministic (hash int mod 18, no
     rand()), pure projection, no keyed shuffle; the oracle rebuilds
     both streams with list slices and matches the fingerprints
-    exactly. _spread (r15, width-conditional): the per-block md5
+    exactly. spread_for_python: the per-block md5
     placement + nested array transforms at cluster width (probe
     0.52 -> 0.28s); lake-wide scans skip it."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     return text.span_corruption(d)
@@ -6032,10 +6000,10 @@ def classifier_calibration(spark: SparkSession, sf: str) -> DataFrame:
     is the classifier miscalibrated there?). Bin edges are floor() of
     bit-identical doubles, per-bin means quantize to 1e-6 integers
     (the source_quality_matrix contract); one projection + one
-    10-group aggregate. _spread (r15, width-conditional): both the
+    10-group aggregate. spread_for_python: both the
     score fold and the gopher flags read the spread frame — cluster
     width instead of input-split width; lake-wide scans skip it."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     sc = d.select(
@@ -6654,12 +6622,12 @@ def curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
     easy→hard ramp). Two windows, both on source-prefixed keys;
     ntile/row_number are purely positional → engine-exact given the
     (quality, doc_id) total order, and quality is the shared exact
-    expression tree. _spread (r15, width-conditional): the quality
+    expression tree. spread_for_python: the quality
     fold (2 md5/token) runs at cluster width ahead of the keyed
     window shuffle (probe 0.56 -> 0.41s; ntile/row_number read the
     post-shuffle total order, so values are partitioning-independent);
     lake-wide scans skip it."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "source", "text")
     )
     w_stage = Window.partitionBy("source").orderBy("quality", "doc_id")
@@ -7631,7 +7599,7 @@ def _bm25_frame(spark: SparkSession, sf: str) -> DataFrame:
     # through a transform lambda, materialize the 9 stats as ONE
     # struct behind an explode-of-one barrier (field reads off a
     # Generate output are plain attribute refs, immune to
-    # project-collapse re-inlining), and _spread the scan.
+    # project-collapse re-inlining), and spread the scan.
     # ONE parsed expression (r15, the _dots/_ivfpq_slices lesson): the
     # Python-lambda form cost ~0.4s of py4j round trips per plan
     # construction (profiled: ~2800 round trips/build across the BM25
@@ -7653,7 +7621,7 @@ def _bm25_frame(spark: SparkSession, sf: str) -> DataFrame:
     # the cache build + (for the eval rows) a second nested cache cost
     # more than the duplicated 32-way tokenize pass saves
     ft = (
-        dedup._spread(d.select("doc_id", "text"))
+        spread_for_python(d.select("doc_id", "text"))
         .select("doc_id", stats.alias("__s"))
         .select(
             "doc_id",
@@ -7699,7 +7667,7 @@ def bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     single-row aggregate broadcast back; top-20 is
     TakeOrderedAndProject (local k-heaps, k-row driver merge) with
     the rank window over 20 rows. No shuffle touches corpus-sized
-    data beyond the one-row agg's partials and _spread's round-robin
+    data beyond the one-row agg's partials and spread_for_python's round-robin
     of the narrow (doc_id, text) projection."""
     sc = _bm25_frame(spark, sf)
     top = sc.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
@@ -8505,11 +8473,11 @@ def quality_repetition_corr(spark: SparkSession, sf: str) -> DataFrame:
     scan; the five moments are ONE single-row aggregate on the 1e-12
     quantized grid (bit-reproducible under any partitioning); r is a
     driver-free scalar expression on that one row. One pass, one
-    one-row shuffle. _spread (r15, width-conditional): both signal
+    one-row shuffle. spread_for_python: both signal
     folds at cluster width (probe 0.64 -> 0.40s; the quantized sums
     are partitioning-independent by construction); lake-wide scans
     skip it."""
-    d = dedup._spread(load_table(spark, sf, "documents").select("text"))
+    d = spread_for_python(load_table(spark, sf, "documents").select("text"))
     toks = text.tokens("text")
     t = d.select(
         text.quality_score("text").alias("x"),
@@ -9206,18 +9174,17 @@ def incremental_cc_warmstart(spark: SparkSession, sf: str) -> DataFrame:
     # is the band-keyed probe + contraction, zero text shingling
     prior, lake_bands, a_bands = _warmstart_state(spark, sf)
     arrival = lambda c: F.col(c) % _LAKE_MOD == 0  # noqa: E731
-    with _batch_scope(spark):
-        # no checkpoint here: delta_components materializes the pair
-        # lineage once inside its combined endpoint+contraction frame
-        new_pairs = dedup.incremental_lsh_pairs(
-            None, lake_bands, _N_HASHES, _BAND, arrival_bands=a_bands
-        )
-        # delta_components = the contracted-merge-graph fast path
-        # (VERDICT r12 #4): bit-equal to connected_components(star
-        # edges UNION new_pairs) with the convergence probe still
-        # asserted, but one unrolled min-propagation job instead of
-        # 3 checkpointed star rounds
-        warm = dedup.delta_components(prior, new_pairs)
+    # no checkpoint here: delta_components materializes the pair
+    # lineage once inside its combined endpoint+contraction frame
+    new_pairs = dedup.incremental_lsh_pairs(
+        None, lake_bands, _N_HASHES, _BAND, arrival_bands=a_bands
+    )
+    # delta_components = the contracted-merge-graph fast path
+    # (VERDICT r12 #4): bit-equal to connected_components(star
+    # edges UNION new_pairs) with the convergence probe still
+    # asserted, but one unrolled min-propagation job instead of
+    # 3 checkpointed star rounds
+    warm = dedup.delta_components(prior, new_pairs)
     p = prior.select("doc", F.col("cluster").alias("prior_cluster"))
     return (
         warm.select(F.col("node").alias("doc"), "cluster")
@@ -9293,15 +9260,14 @@ def incremental_cc_from_table(spark: SparkSession, sf: str) -> DataFrame:
     shingling. The summary aggregate is a single model-sized row."""
     prior, lake_bands, a_bands = _warmstart_state(spark, sf)
     arrival = lambda c: F.col(c) % _LAKE_MOD == 0  # noqa: E731
-    with _batch_scope(spark):
-        # no checkpoint: delta_components materializes the pair
-        # lineage once (see incremental_cc_warmstart); the batch's
-        # fingerprints read from stored state (VERDICT r13 #5)
-        new_pairs = dedup.incremental_lsh_pairs(
-            None, lake_bands, _N_HASHES, _BAND, arrival_bands=a_bands
-        )
-        # contracted-merge-graph fast path — see incremental_cc_warmstart
-        warm = dedup.delta_components(prior, new_pairs)
+    # no checkpoint: delta_components materializes the pair
+    # lineage once (see incremental_cc_warmstart); the batch's
+    # fingerprints read from stored state (VERDICT r13 #5)
+    new_pairs = dedup.incremental_lsh_pairs(
+        None, lake_bands, _N_HASHES, _BAND, arrival_bands=a_bands
+    )
+    # contracted-merge-graph fast path — see incremental_cc_warmstart
+    warm = dedup.delta_components(prior, new_pairs)
     out = warm.select(F.col("node").alias("doc"), "cluster").join(
         prior.select("doc", F.col("cluster").alias("prior_cluster")),
         "doc",
@@ -9713,9 +9679,9 @@ def quality_calibration_report(spark: SparkSession, sf: str) -> DataFrame:
     quality_classifier; the report is ONE 10-group aggregate with
     map-side partials, quantized-grid means, and integer label
     counts — bit-identical in both engines at any corpus size.
-    _spread (r15, width-conditional): the inference fold at cluster
+    spread_for_python: the inference fold at cluster
     width; lake-wide scans skip the round-robin."""
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     grade = (
@@ -9947,12 +9913,11 @@ def _lrn_trajectory(spark: SparkSession, sf: str, feat: DataFrame | None = None)
 
 def _lrn_features(spark: SparkSession, sf: str) -> DataFrame:
     """(source, score, stop, y) — the training projection; pure
-    Column work, fuses with the scan. _spread (r15,
-    width-conditional): the hashed-linear fold (2 md5/token) is the
-    per-row cost and the frame is persisted by every trainer — fill
-    the cache at cluster width, not input-split width; lake-wide
-    scans skip the round-robin."""
-    d = dedup._spread(
+    Column work, fuses with the scan. spread_for_python: the
+    hashed-linear fold (2 md5/token) is the per-row cost and the frame
+    is persisted by every trainer — fill the cache at cluster width,
+    not input-split width; lake-wide scans skip the round-robin."""
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "source", "text")
     )
     grade = (
@@ -11120,10 +11085,10 @@ def classifier_calibration_drift(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: inference is a zero-shuffle projection; the report
     is one (window × 10-bin) aggregate with map-side partials plus a
     4-row rollup. The oracle re-trains the identical model in
-    unrolled CTEs and rebuilds every window's buckets. _spread (r15,
-    width-conditional): the inference fold (2 md5/token) runs at
-    cluster width; lake-wide scans skip the round-robin."""
-    d = dedup._spread(
+    unrolled CTEs and rebuilds every window's buckets. spread_for_python:
+    the inference fold (2 md5/token) runs at cluster width; lake-wide
+    scans skip the round-robin."""
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "text")
     )
     wts = _lrn_trajectory(spark, sf)[-1][1]
@@ -11837,11 +11802,10 @@ def classifier_uncertainty_sampling(spark: SparkSession, sf: str) -> DataFrame:
     nothing collects but the 3-float weight vector. The oracle
     re-trains the identical model in unrolled SQL CTEs and replays
     the same windowed selection, so green means both engines agree on
-    the MODEL and on the chosen docs. _spread (r15,
-    width-conditional): the inference fold at cluster width;
-    lake-wide scans skip the round-robin."""
+    the MODEL and on the chosen docs. spread_for_python: the inference
+    fold at cluster width; lake-wide scans skip the round-robin."""
     w = _lrn_trajectory(spark, sf)[-1][1]
-    d = dedup._spread(
+    d = spread_for_python(
         load_table(spark, sf, "documents").select("doc_id", "source", "text")
     )
     feat = d.select(
@@ -12782,25 +12746,19 @@ def ann_recall_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     per_pair = adc5.unionByName(cos5).groupBy("q_id", "n_id").agg(
         F.collect_set("tier").alias("ts")
     )
-    # _batch_scope (r15): the ADC/rerank/ground-truth shuffles are all
-    # model-sized (8 queries), so byte-sized AQE coalescing applies —
-    # see ann_recall_report. A/B min-of-3: 4.18 -> 3.03s. The scope
-    # covers the one collect that computes everything (the persisted
-    # `ranked` materializes inside it too); restored before return.
-    with _batch_scope(spark):
-        hit_rows = {
-            r["tier"]: (r["hits"], r["n_in_tier"])
-            for r in per_pair.select(
-                F.explode("ts").alias("tier"),
-                F.array_contains("ts", "__bf").cast("int").alias("bf_hit"),
-            )
-            .groupBy("tier")
-            .agg(
-                F.sum("bf_hit").alias("hits"),
-                F.count(F.lit(1)).alias("n_in_tier"),
-            )
-            .collect()
-        }
+    hit_rows = {
+        r["tier"]: (r["hits"], r["n_in_tier"])
+        for r in per_pair.select(
+            F.explode("ts").alias("tier"),
+            F.array_contains("ts", "__bf").cast("int").alias("bf_hit"),
+        )
+        .groupBy("tier")
+        .agg(
+            F.sum("bf_hit").alias("hits"),
+            F.count(F.lit(1)).alias("n_in_tier"),
+        )
+        .collect()
+    }
     n_true = hit_rows["__bf"][1]
     ranked.unpersist()
     out_tiers = ["ivfpq"] + (["ivfpq_seeded"] if audit else []) + [

@@ -123,52 +123,6 @@ def _source_stamp(path: str):
         return None
 
 
-def set_aqe(spark: SparkSession, want: bool) -> None:
-    """Set spark.sql.adaptive.enabled, deduped per session (a py4j
-    conf round trip per call would cost ~0.2s/pass across the
-    catalog's 340+ load sites)."""
-    cache = _scan_cache_for(spark)
-    val = "true" if want else "false"
-    if cache.get("__aqe__") == val:
-        return
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", val)
-        cache["__aqe__"] = val
-    except Exception:
-        pass  # conf locked down: run with whatever the session has
-
-
-def _note_source_bytes(spark: SparkSession, path: str) -> None:
-    """Track the largest source this session has loaded (bytes,
-    os.stat-cheap, recorded once per scan-cache fill). _spread reads
-    it as a zero-cost posture signal: below the probe threshold the
-    corpus is certainly narrow (spread unconditionally — the bench/dev
-    branch); above it the input may already be wide and a per-frame
-    width probe is worth its ~50ms (the lake branch)."""
-    import os
-
-    cache = _scan_cache_for(spark)
-    try:
-        if os.path.isdir(path):
-            n = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-            )
-        else:
-            n = os.path.getsize(path)
-    except OSError:
-        # non-local (s3://, hdfs://): size unknowable cheaply — assume
-        # lake-sized so the width probe always runs there
-        n = 1 << 62
-    if n > cache.get("__max_source_bytes__", 0):
-        cache["__max_source_bytes__"] = n
-
-
-def max_source_bytes(spark: SparkSession) -> int:
-    """Largest source loaded through the scan cache this session."""
-    return _scan_cache_for(spark).get("__max_source_bytes__", 0)
-
-
 def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Cached raw parquet scan frame (no timestamp normalization) —
     the _SCAN_CACHE posture for paths that are not sf-dir tables:
@@ -184,7 +138,6 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     if df is None:
         df = spark.read.parquet(path)
         cache[key] = df
-        _note_source_bytes(spark, path)
     return df
 
 
@@ -202,7 +155,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     data is re-read from parquet by every action."""
     path = f"{sf_dir}/{name}.parquet"
     cache = _scan_cache_for(spark)
-    set_aqe(spark, True)
     key = ("table", path, _source_stamp(path))
     df = cache.get(key)
     if df is None:
@@ -211,7 +163,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             if c in df.columns:
                 df = normalize_ts(df, c)
         cache[key] = df
-        _note_source_bytes(spark, path)
     return df
 
 

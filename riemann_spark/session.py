@@ -5,6 +5,10 @@ same logical plans scale to a multi-executor cluster: AQE on (runtime
 shuffle-partition coalescing + skew-join splitting), modest
 shuffle-partition default (overridable per deployment), Arrow enabled
 for the pandas-UDF escape hatches.
+
+Session conf is set here, once, before any action runs: no engine code
+changes it afterwards, so concurrent actions on one session all see
+the same settings.
 """
 
 from __future__ import annotations
@@ -13,10 +17,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "riemann-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # Python workers import riemann_spark (the daemon module, pickled
+    # UDFs) with the PYTHONPATH the JVM inherits from this process at
+    # launch; this interpreter's sys.path never reaches them.
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PKG_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_PKG_ROOT] + paths)
     return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -53,6 +65,14 @@ def get_spark(app_name: str = "riemann-spark", cpus: int | None = None) -> Spark
         .config("spark.sql.session.timeZone", "UTC")
         # driver parquet uses TIMESTAMP(NANOS); read as long, convert in load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # SQL text embeds regex literals such as '\\s+' (the BM25
+        # tokenizer, similarity._dots_sql); pinned so a deployment's
+        # default cannot change how they parse
+        .config("spark.sql.parser.escapedStringLiterals", "false")
+        # point lookups (bucketing.index_point_get) keep their bucketed
+        # scan: otherwise DisableUnnecessaryBucketedScan reads all n
+        # buckets of a pure-filter plan
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -24,6 +24,8 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # as get_spark: point lookups keep their bucketed scan
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .getOrCreate()
     )
     yield s

@@ -108,11 +108,13 @@ def test_index_point_get_prunes_to_one_bucket(spark, bucketed_index):
 def test_index_host_filter_prunes_buckets(spark, bucketed_index):
     """A host-only filter still prunes (the composite-key layout would
     not); control: an unfiltered scan selects no bucket subset."""
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
     try:
         f = spark.table(bucketed_index).filter(F.col("host") == "h3")
         assert "SelectedBucketsCount: 1 out of 8" in _plan(f)
         full = spark.table(bucketed_index)
         assert "SelectedBucketsCount: 8 out of 8" in _plan(full)
     finally:
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
+        spark.conf.set(key, old)

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import io
 import contextlib
+import re
+import time
 
 import pytest
 
@@ -26,6 +28,13 @@ def plan_of_df(df) -> str:
 
 def plan_of(spark, name: str) -> str:
     return plan_of_df(QUERIES[name](spark, SF))
+
+
+def exchange_nodes(plan: str) -> int:
+    """Exchange nodes in a formatted plan, counted once each by their
+    numbered detail header (``(3) Exchange``) — a raw substring count
+    also hits the tree line and any node that merely names one."""
+    return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
 
 
 def test_where_filter_pushdown_and_pruning(spark):
@@ -119,12 +128,12 @@ def test_dedup_jaccard_single_shingle_shuffle(spark):
 
 def test_token_stats_is_pure_projection(spark):
     """Token counting + fingerprints fuse into one projection pass —
-    no KEYED shuffle at any scale. Since r15 the single-split fixture
-    carries exactly _spread's round-robin (the BPE regex + md5 folds
-    run cluster-wide; a lake-wide scan skips it — see
-    test_spread_is_input_width_conditional)."""
+    no KEYED shuffle at any scale. The single-split fixture carries
+    exactly spread_for_python's round-robin (the BPE regex + md5 folds
+    run cluster-wide; a scan already at cluster width skips it — see
+    test_spread_decides_from_the_frame)."""
     p = plan_of(spark, "token_stats")
-    assert p.count("Exchange") == 2  # one node: tree line + details
+    assert exchange_nodes(p) == 1
     assert "RoundRobinPartitioning" in p
     assert "hashpartitioning" not in p
 
@@ -222,13 +231,12 @@ def test_bloom_filter_probe_is_pure_projection(spark):
     # bloom aggregate expression (identical bit set — equivalence
     # asserted in test_streaming_gate_expr_matches_join_probe): the
     # train side is now a projection with NO join and no shuffle
-    # beyond _spread's round-robin
+    # beyond spread_for_python's round-robin
     p = plan_of(spark, "contamination_bloom")
     assert "Join" not in p
     assert "CartesianProduct" not in p
-    # exactly one Exchange node — _spread's round-robin (formatted
-    # plans print each node twice: tree line + details block)
-    assert p.count("Exchange") == 2
+    # exactly one Exchange node — spread_for_python's round-robin
+    assert exchange_nodes(p) == 1
     assert "RoundRobinPartitioning" in p
     assert "hashpartitioning" not in p
     assert p.count("md5(") == 1  # one md5 per shingle, bound via transform
@@ -322,8 +330,8 @@ def test_substring_dedup_two_shuffles_no_join(spark):
     p = plan_of(spark, "substring_dedup")
     import re
 
-    # keyed shuffles only — _spread's RoundRobin repartition is the
-    # deliberate small-input fan-out, not part of the algorithm
+    # keyed shuffles only — spread_for_python's RoundRobin repartition is
+    # the deliberate small-input fan-out, not part of the algorithm
     n = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
     rr = p.count("RoundRobinPartitioning")
     assert n - rr == 2, p[:1500]
@@ -749,45 +757,64 @@ def test_boilerplate_removal_groupby_not_window(spark):
     assert "partial_count" in p
 
 
-def test_spread_is_input_width_conditional(spark, monkeypatch):
-    """VERDICT r14 #1: in the lake posture (probe threshold crossed),
-    _spread must round-robin a narrow (single-split) input to cluster
-    width AND be a no-op on an input already at or above cluster
-    width — at 100 TB the scan has thousands of splits and an
-    unconditional repartition is a pure full-corpus shuffle write of
-    the text payload. In the small-corpus posture (sources below the
-    threshold) it spreads unconditionally, probe-free — the r14 bench
-    shapes. All shapes pinned, for both copies (dedup._spread /
-    similarity._spread)."""
+def test_spread_decides_from_the_frame(spark):
+    """spread_for_python, the one width helper, reads the frame's own
+    plan: a narrow (single-split) frame is round-robined to cluster
+    width; an exchange-free frame already that wide comes back as is
+    (at 100 TB the scan has thousands of splits and a repartition
+    would be a pure full-corpus shuffle write); a frame with an
+    upstream shuffle is spread without running that shuffle to learn
+    its post-AQE width — the decision starts no job."""
     from pyspark.sql import functions as F
 
-    from riemann_spark.functions import dedup, similarity
+    from riemann_spark.operators.skew import spread_for_python
+
+    sc = spark.sparkContext
+    width = sc.defaultParallelism
+    narrow = spark.range(100).coalesce(1)
+    assert "RoundRobinPartitioning" in plan_of_df(spread_for_python(narrow))
+    wide = spark.range(0, 100, 1, width + 1)
+    assert spread_for_python(wide) is wide
+
+    shuffled = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    group = "test-spread-decision"
+    sc.setJobGroup(group, group)
+    try:
+        spread = spread_for_python(shuffled)
+        spark.range(1).collect()  # one known job: the listener has caught up
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    for _ in range(100):
+        if ids:
+            break
+        time.sleep(0.05)
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(ids) == 1, ids
+    assert "RoundRobinPartitioning" in plan_of_df(spread)
+
+
+def test_received_events_decode_has_no_exchange(spark):
+    """The wire frames' createDataFrame frame is already cluster-wide,
+    so the decode runs on it directly — no round-robin in front of
+    MapInPandas."""
+    from riemann_spark.sources.servers import TcpMsgServer, send_events_tcp
 
     width = spark.sparkContext.defaultParallelism
-    narrow = spark.range(100).coalesce(1).select(
-        F.col("id"), F.col("id").cast("string").alias("text")
-    )
-    wide = spark.range(100).repartition(width + 1).select(
-        F.col("id"), F.col("id").cast("string").alias("text")
-    )
-    # lake posture: probe always runs
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_PROBE_ABOVE_BYTES", "0")
-    for mod in (dedup, similarity):
-        p_narrow = plan_of_df(mod._spread(narrow))
-        assert "RoundRobinPartitioning" in p_narrow, mod.__name__
-        # identity return proves no exchange was added on the wide path
-        assert mod._spread(wide) is wide, mod.__name__
-    # small-corpus posture: unconditional spread, no probe (the
-    # threshold is far above anything this suite loads)
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD_PROBE_ABOVE_BYTES", raising=False)
-    p_wide = plan_of_df(dedup._spread(wide))
-    assert "RoundRobinPartitioning" in p_wide
+    with TcpMsgServer() as srv:
+        for i in range(width + 1):
+            send_events_tcp(srv.port, [{"host": f"h{i}", "service": "s", "time": 1.0}])
+        events = srv.received_events(spark)
+        p = plan_of_df(events)
+        assert events.count() == width + 1
+    assert "MapInPandas" in p
+    assert exchange_nodes(p) == 0
 
 
 def test_round6_batch3_pure_projections_zero_shuffle(spark):
     """fim_transform / blocklist_gate / char_entropy /
     winnowing_fingerprints are ingest-stage projections: zero
-    Exchanges (char_entropy since r14 carries exactly _spread's
+    Exchanges (char_entropy since r14 carries exactly spread_for_python's
     round-robin so its O(charset × chars) fold runs cluster-wide —
     still no keyed shuffle); winnowing's gram-hash array is bound
     through a prior select so the window fold reads it instead of
@@ -801,7 +828,7 @@ def test_round6_batch3_pure_projections_zero_shuffle(spark):
         p = plan_of(spark, name)
         assert "Exchange" not in p, name
     p = plan_of(spark, "char_entropy")
-    assert p.count("Exchange") == 2  # one node: tree line + details
+    assert exchange_nodes(p) == 1
     assert "RoundRobinPartitioning" in p
     assert "hashpartitioning" not in p
     # winnowing_fingerprints serves the STORED index (r12) — its
@@ -1074,8 +1101,8 @@ def test_curriculum_order_two_keyed_windows(spark):
     p = plan_of(spark, "curriculum_order")
     assert len(re.findall(r"^\(\d+\) Window", p, re.M)) == 2, p
     # exactly ONE keyed exchange (hashpartitioning(source) shared by
-    # both windows); the second exchange is _spread's round-robin on
-    # the single-split fixture (r15 — skipped on a lake-wide scan)
+    # both windows); the second exchange is spread_for_python's
+    # round-robin on the single-split fixture (skipped on a wide scan)
     assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 2, p
     assert p.count("Arguments: hashpartitioning(source") == 1, p
     assert "RoundRobinPartitioning" in p
@@ -1513,9 +1540,9 @@ def test_classifier_uncertainty_sampling_one_scan_one_window(spark):
     """Uncertainty sampling must stay a single-scan feature projection
     feeding ONE per-source top-k window: one documents scan, one
     KEYED exchange (the window's source partitioning), no joins.
-    Since r15 the single-split fixture also carries _spread's
-    round-robin ahead of the inference fold (skipped on a lake-wide
-    scan — see test_spread_is_input_width_conditional)."""
+    Since r15 the single-split fixture also carries spread_for_python's
+    round-robin ahead of the inference fold (skipped on a wide
+    scan — see test_spread_decides_from_the_frame)."""
     import re
 
     p = plan_of(spark, "classifier_uncertainty_sampling")
