@@ -10,14 +10,22 @@ oracle.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+# sessions _configure has already set up
+_CONFIGURED: weakref.WeakSet = weakref.WeakSet()
+
 
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply session settings this engine relies on (the driver may
-    hand us a session built without them)."""
+    hand us a session built without them), once per session: the
+    values never change, and a conf write touches every action running
+    on the shared session."""
+    if spark in _CONFIGURED:
+        return spark
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -26,6 +34,7 @@ def _configure(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # catalog SQL embeds regex literals such as '\\s+'
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    _CONFIGURED.add(spark)
     return spark
 
 

@@ -382,33 +382,51 @@ def events_to_msg_binary(df: DataFrame) -> DataFrame:
     return spread_for_python(df.select(*cols)).mapInPandas(enc, _ENC_SCHEMA)
 
 
+def _decoded_batches(
+    batches: Iterator[pd.DataFrame], bin_col: str, skip_bad: bool
+) -> Iterator[pd.DataFrame]:
+    """Fan ``Msg`` frames out to one DECODED_SCHEMA row per event. A
+    batch whose frames carry no events (e.g. a lone ``Msg{ok}``) yields
+    nothing: its empty columns would build as float64, which Arrow
+    cannot convert to the list/map fields. ``skip_bad`` drops
+    undecodable frames instead of raising."""
+    names = [f.name for f in DECODED_SCHEMA.fields]
+    for pdf in batches:
+        # one python list per output column — pandas assembles each
+        # as a single object array, no per-row list boxing
+        cols: list[list] = [[] for _ in names]
+        for buf in pdf[bin_col]:
+            if type(buf) is not bytes:  # Arrow usually hands bytes already
+                buf = bytes(buf)
+            try:
+                events = decode_msg(buf)["events"]
+            except Exception:
+                if not skip_bad:
+                    raise
+                continue
+            for e in events:
+                g = e.get
+                m, t = g("metric"), g("ttl")
+                cols[0].append(g("host"))
+                cols[1].append(g("service"))
+                cols[2].append(g("state"))
+                cols[3].append(g("description"))
+                cols[4].append(None if m is None else float(m))
+                cols[5].append(g("tags") or [])
+                cols[6].append(g("time"))
+                cols[7].append(g("time_us"))
+                cols[8].append(None if t is None else float(t))
+                cols[9].append(g("attributes") or {})
+        if cols[0]:
+            yield pd.DataFrame(dict(zip(names, cols)))
+
+
 def msg_binary_to_events(df: DataFrame, bin_col: str = "msg") -> DataFrame:
     """Decode ``Msg`` frames into event rows (ingest half). Multi-event
     frames fan out to one row per event, matching decode-msg."""
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in DECODED_SCHEMA.fields]
-        for pdf in batches:
-            # one python list per output column — pandas assembles each
-            # as a single object array, no per-row list boxing
-            cols: list[list] = [[] for _ in names]
-            for buf in pdf[bin_col]:
-                if type(buf) is not bytes:  # Arrow usually hands bytes already
-                    buf = bytes(buf)
-                for e in decode_msg(buf)["events"]:
-                    g = e.get
-                    m, t = g("metric"), g("ttl")
-                    cols[0].append(g("host"))
-                    cols[1].append(g("service"))
-                    cols[2].append(g("state"))
-                    cols[3].append(g("description"))
-                    cols[4].append(None if m is None else float(m))
-                    cols[5].append(g("tags") or [])
-                    cols[6].append(g("time"))
-                    cols[7].append(g("time_us"))
-                    cols[8].append(None if t is None else float(t))
-                    cols[9].append(g("attributes") or {})
-            yield pd.DataFrame(dict(zip(names, cols)))
+        return _decoded_batches(batches, bin_col, skip_bad=False)
 
     from riemann_spark.operators.skew import spread_for_python
 
@@ -435,34 +453,7 @@ def msg_binary_to_events_with_errors(
     side is ~empty and costs only the shared decode attempt."""
 
     def dec_ok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in DECODED_SCHEMA.fields]
-        for pdf in batches:
-            cols: list[list] = [[] for _ in names]
-            for buf in pdf[bin_col]:
-                if type(buf) is not bytes:
-                    buf = bytes(buf)
-                try:
-                    events = decode_msg(buf)["events"]
-                except Exception:
-                    continue
-                for e in events:
-                    g = e.get
-                    m, t = g("metric"), g("ttl")
-                    cols[0].append(g("host"))
-                    cols[1].append(g("service"))
-                    cols[2].append(g("state"))
-                    cols[3].append(g("description"))
-                    cols[4].append(None if m is None else float(m))
-                    cols[5].append(g("tags") or [])
-                    cols[6].append(g("time"))
-                    cols[7].append(g("time_us"))
-                    cols[8].append(None if t is None else float(t))
-                    cols[9].append(g("attributes") or {})
-            # object dtype: an empty batch must not default to float64
-            # (Arrow cannot convert empty float64 -> list<string>)
-            yield pd.DataFrame(
-                {n: pd.Series(c, dtype="object") for n, c in zip(names, cols)}
-            )
+        return _decoded_batches(batches, bin_col, skip_bad=True)
 
     def dec_dead(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -52,6 +52,23 @@ def _read_exact(rf, n: int) -> bytes | None:
     return buf
 
 
+def _received_events(
+    server: "TcpMsgServer | UdpMsgServer",
+    spark: SparkSession,
+    now: float | None,
+) -> DataFrame:
+    """Decode a server's spooled frames into event rows (multi-event
+    frames fan out), through the same mapInPandas codec as the Kafka
+    bridge. Time-less events get the ingest clock — the decode-msg
+    -> post-load-event seam (common.clj:86-98); ``now`` pins it."""
+    from riemann_spark.operators.stateless import ensure_event_times
+
+    with server._lock:
+        rows = [(f,) for f in server.frames]
+    raw = spark.createDataFrame(rows, "msg binary")
+    return ensure_event_times(msg_binary_to_events(raw), now=now)
+
+
 class TcpMsgServer:
     """Threaded loopback TCP server speaking int32-framed ``Msg``.
 
@@ -127,16 +144,7 @@ class TcpMsgServer:
     def received_events(
         self, spark: SparkSession, now: float | None = None
     ) -> DataFrame:
-        """Decode spooled frames into event rows (multi-event frames
-        fan out), through the same mapInPandas codec as the Kafka
-        bridge. Time-less events get the ingest clock — the decode-msg
-        -> post-load-event seam (common.clj:86-98); ``now`` pins it."""
-        from riemann_spark.operators.stateless import ensure_event_times
-
-        with self._lock:
-            rows = [(f,) for f in self.frames]
-        raw = spark.createDataFrame(rows, "msg binary")
-        return ensure_event_times(msg_binary_to_events(raw), now=now)
+        return _received_events(self, spark, now)
 
 
 class UdpMsgServer:
@@ -172,12 +180,7 @@ class UdpMsgServer:
     def received_events(
         self, spark: SparkSession, now: float | None = None
     ) -> DataFrame:
-        from riemann_spark.operators.stateless import ensure_event_times
-
-        with self._lock:
-            rows = [(f,) for f in self.frames]
-        raw = spark.createDataFrame(rows, "msg binary")
-        return ensure_event_times(msg_binary_to_events(raw), now=now)
+        return _received_events(self, spark, now)
 
 
 # ------------------------------------------------------------------ #

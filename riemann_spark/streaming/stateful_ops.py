@@ -3,10 +3,9 @@ pieces with no Catalyst/built-in equivalent).
 
 All are per-key state machines written against the
 ``applyInPandasWithState`` contract and routed through
-``state_api.apply_with_state`` — the single seam where the Spark 4
-``transformWithStateInPandas`` API plugs in once ``google.protobuf``
-is available (see state_api.STATE_TABLE for each operator's state
-contract). Within a micro-batch, rows are processed in
+``state_api.apply_with_state``; each declares its state shape and
+timeout mode in the ``state_schema``/``timeout`` it passes there.
+Within a micro-batch, rows are processed in
 (time, event_id) order — the deterministic stand-in for the
 reference's arrival order; cross-batch disorder is handled by each
 operator's own semantics (ewma's negative Δt branch, the index's

@@ -7,10 +7,9 @@ ttl decay, fillers) under ``riemann.time.controlled``: events alternate
 with advance-intervals and scheduled tasks fire deterministically. The
 Spark analogue of "scheduled task" is the processing-time timer, so
 this harness drives an operator's REAL update closure (captured via the
-``state_api._capture_hook`` seam — the same seam the TWS contract tests
-use) against a controlled clock: each advance fires due timers in
-deadline order, exactly what the micro-batch engine does with real
-time, minus the wall.
+``state_api._capture_hook`` seam) against a controlled clock: each
+advance fires due timers in deadline order, exactly what the
+micro-batch engine does with real time, minus the wall.
 
 GroupState semantics reproduced faithfully:
 - timers do NOT persist across invocations — any invocation that wants

@@ -12,22 +12,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from riemann_spark import get_spark
 from riemann_spark.schema import EVENT_SCHEMA
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.appName("riemann-spark-tests")
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # as get_spark: point lookups keep their bucketed scan
-        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's own session conf, so tests run what the engine runs
+    s = get_spark("riemann-spark-tests", cpus=4)
     yield s
     s.stop()
 

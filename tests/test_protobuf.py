@@ -170,3 +170,24 @@ def test_decode_dead_letter_split(spark):
     dl = dead.collect()
     assert len(dl) == 1
     assert bytes(dl[0].msg) == bad and "ValueError" in dl[0].error
+
+
+def test_event_less_frame_decodes_to_no_rows(spark):
+    """A ``Msg{ok}`` frame carries no events (TcpMsgServer spools any
+    non-query Msg). Alone in a partition it decodes to 0 rows on both
+    decode paths, and beside an event frame it adds none."""
+    from riemann_spark.sources.protobuf import (
+        encode_msg,
+        msg_binary_to_events,
+        msg_binary_to_events_with_errors,
+    )
+
+    empty = spark.createDataFrame([(encode_msg(ok=True),)], "msg binary")
+    assert msg_binary_to_events(empty).collect() == []
+    assert msg_binary_to_events_with_errors(empty)[0].collect() == []
+
+    good = encode_msg([{"host": "h1", "service": "s", "metric": 1.5, "time": 10.0}])
+    mixed = spark.sparkContext.parallelize(
+        [(encode_msg(ok=True),), (good,)], 2
+    ).toDF("msg binary")
+    assert [r.host for r in msg_binary_to_events(mixed).collect()] == ["h1"]

@@ -21,24 +21,54 @@ ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = ROOT / "riemann_spark"
 
 
-def _conf_writes(path: pathlib.Path) -> list[str]:
-    """``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` calls in a file."""
+def _conf_writes(path: pathlib.Path, allowed_in: tuple[str, ...] = ()) -> list[str]:
+    """``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` calls in a file,
+    outside the top-level functions named in ``allowed_in``."""
     hits = []
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("set", "unset")
-            and isinstance(node.func.value, ast.Attribute)
-            and node.func.value.attr == "conf"
-        ):
-            hits.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    for top in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(top, ast.FunctionDef) and top.name in allowed_in:
+            continue
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                hits.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     return hits
 
 
 def test_engine_never_writes_session_conf():
     hits = [h for p in sorted(PKG.rglob("*.py")) for h in _conf_writes(p)]
+    hits += _conf_writes(ROOT / "__spark_entry__.py", allowed_in=("_configure",))
     assert hits == [], "runtime conf writes (set them in get_spark): " + ", ".join(hits)
+
+
+class _RecordingSession:
+    """A stand-in session whose ``conf.set`` calls are counted."""
+
+    def __init__(self):
+        self.writes: list[tuple[str, str]] = []
+        self.conf = self
+
+    def set(self, key, value):
+        self.writes.append((key, value))
+
+
+def test_entry_queries_configure_each_session_once(monkeypatch):
+    """The driver wrappers set the session conf on the first call for a
+    session only; later calls on it write nothing."""
+    import __spark_entry__
+    import riemann_spark.plans as plans
+
+    monkeypatch.setattr(plans, "QUERIES", {"q": lambda spark, sf: spark})
+    run = __spark_entry__.queries()["q"]
+    session = _RecordingSession()
+    run(session, "sf")
+    run(session, "sf")
+    assert len(session.writes) == 4, session.writes
 
 
 _CHILD = r"""

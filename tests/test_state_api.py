@@ -1,36 +1,19 @@
-"""state_api adapter: the migration seam between applyInPandasWithState
-(exercised everywhere in-container) and transformWithStateInPandas
-(needs google.protobuf — cluster-only; that lane skips here)."""
+"""state_api adapter: the one seam every stateful operator routes
+through, and a contract script per operator driven on the
+applyInPandasWithState GroupState surface."""
 
 from __future__ import annotations
 
-import importlib.util
 import inspect
 
 import pytest
 
 from riemann_spark.streaming import index_stream, stateful_ops
-from riemann_spark.streaming.state_api import STATE_TABLE, apply_with_state
-
-
-def test_state_table_covers_every_stateful_operator():
-    """Every applyInPandasWithState-backed operator must document its
-    state contract — the table a TWS migration preserves."""
-    ops = [
-        name
-        for name, fn in inspect.getmembers(stateful_ops, inspect.isfunction)
-        if name.startswith("streaming_")
-    ]
-    for name in ops:
-        assert name in STATE_TABLE, f"{name} missing from STATE_TABLE"
-    assert "index_stream (expire reaper)" in STATE_TABLE
-    for name, row in STATE_TABLE.items():
-        assert {"keys", "state", "timeout", "emission"} <= set(row), name
 
 
 def test_all_call_sites_route_through_adapter():
     """No operator may call applyInPandasWithState directly — the
-    adapter is the single seam the migration flips."""
+    adapter is the single seam."""
     for mod in (stateful_ops, index_stream):
         src = inspect.getsource(mod)
         direct = [
@@ -39,91 +22,6 @@ def test_all_call_sites_route_through_adapter():
             if ".applyInPandasWithState(" in line
         ]
         assert not direct, f"direct call left in {mod.__name__}: {direct}"
-
-
-def _has_protobuf() -> bool:
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (cluster-only)",
-)
-def test_tws_lane_smoke(spark, tmp_path):
-    """Where protobuf exists: the SAME update fn must produce the same
-    rows through the TWS shim as through the legacy API."""
-    import uuid
-
-    from riemann_spark.streaming.stateful_ops import streaming_changed
-    from tests.test_streaming import _mk, _run_stream
-
-    import riemann_spark.streaming.state_api as sa
-
-    old = sa._tws_available
-    sa._tws_available = lambda: True
-    try:
-        src, ckpt = str(tmp_path / "s"), str(tmp_path / "c")
-        import os
-
-        os.makedirs(src)
-        batches = [[_mk(0, "a", "x", metric=1.0, t=0.0, state="ok")],
-                   [_mk(1, "a", "x", metric=2.0, t=1.0, state="critical")]]
-        rows = _run_stream(
-            spark, src, ckpt, lambda s: streaming_changed(s), f"tws_{uuid.uuid4().hex[:6]}",
-            batches,
-        )
-        assert len(rows) >= 1
-    finally:
-        sa._tws_available = old
-
-
-# ------------------------------------------- shim vs legacy (in-container)
-
-class _FakeValueState:
-    """TWS ValueState surface the shim maps onto."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.timers = []
-
-    def registerTimer(self, ts):
-        self.timers.append(int(ts))
-
-    def deleteTimer(self, ts):
-        self.timers.remove(ts)
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-class _FakeTimerValues:
-    def __init__(self, now_ms=0, wm_ms=0):
-        self._now, self._wm = now_ms, wm_ms
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._now
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
 
 
 class _FakeLegacyState:
@@ -179,77 +77,42 @@ def _capture_update(monkeypatch, build):
     return cap["update"]
 
 
-def test_tws_shim_matches_legacy_for_streaming_ewma(monkeypatch):
-    """The 1:1 GroupState→TWS mapping, executable without
-    google.protobuf: the REAL streaming_ewma update fn produces
-    identical emissions and identical final state through
-    TwsGroupStateShim (over fake ValueState/handle/timers) as through
-    the legacy GroupState surface — two batches, state carried."""
-    import pandas as pd
-
-    from riemann_spark.streaming.state_api import TwsGroupStateShim
-    from riemann_spark.streaming.stateful_ops import streaming_ewma
-
-    update = _capture_update(monkeypatch, lambda: streaming_ewma(None, 10.0))
-    key = ("h1", "svc")
-    b1 = pd.DataFrame({"event_id": [0, 1], "time": [0.0, 5.0], "metric": [1.0, 2.0]})
-    b2 = pd.DataFrame({"event_id": [2], "time": [15.0], "metric": [4.0]})
-
-    legacy = _FakeLegacyState()
-    out_legacy = [
-        df for batch in (b1, b2) for df in update(key, iter([batch.copy()]), legacy)
-    ]
-
-    vs, handle = _FakeValueState(), _FakeHandle()
-    shim = TwsGroupStateShim(vs, handle, _FakeTimerValues())
-    out_shim = [
-        df for batch in (b1, b2) for df in update(key, iter([batch.copy()]), shim)
-    ]
-
-    assert len(out_legacy) == len(out_shim) == 2
-    for a, b in zip(out_legacy, out_shim):
-        pd.testing.assert_frame_equal(a, b)
-    assert legacy.get == vs.get()  # identical checkpointed state
-
-
 def test_tws_shim_timer_lane_streaming_coalesce(monkeypatch):
-    """Timer surface through the shim with the REAL streaming_coalesce
-    update fn: a data invocation arms exactly one processing-time
-    timer (stale timers deleted), a timed-out invocation emits the
-    snapshot row and re-arms; the 'expired' tombstone removes state."""
+    """Timer surface with the REAL streaming_coalesce update fn: a data
+    invocation buffers and arms the timeout to the absolute deadline, a
+    timed-out invocation emits the snapshot row and re-arms; the
+    'expired' tombstone is emitted once, then the state is removed."""
     import pandas as pd
 
-    from riemann_spark.streaming.state_api import TwsGroupStateShim
     from riemann_spark.streaming.stateful_ops import streaming_coalesce
 
     update = _capture_update(monkeypatch, lambda: streaming_coalesce(None, 2.0))
     key = ("h1", "svc")
-    vs, handle = _FakeValueState(), _FakeHandle()
-    handle.timers = [111, 222]  # stale timers a re-arm must clear
+    st = _FakeLegacyState(now_ms=1000)
 
     rows = pd.DataFrame(
         {"event_id": [0], "time": [1.0], "metric": [5.0], "state": ["ok"]}
     )
-    out = list(update(key, iter([rows]), TwsGroupStateShim(vs, handle, _FakeTimerValues(1000))))
+    out = list(update(key, iter([rows]), st))
     assert out == []  # data invocations buffer, emission is timer-driven
-    assert vs.exists() and vs.get()[:3] == ("ok", 5.0, 1.0)
-    assert handle.listTimers() == [1000 + 2000]  # stale ones deleted
+    assert st.exists and st.get[:3] == ("ok", 5.0, 1.0)
+    assert st.timeout_set_ms == 3000 - 1000  # deadline now + dt
 
-    # timer fires: snapshot emitted, deadline re-armed from 'now'
-    shim = TwsGroupStateShim(vs, handle, _FakeTimerValues(3000), has_timed_out=True)
-    out = list(update(key, iter(()), shim))
+    # timer fires: snapshot emitted, timeout re-armed for the next dt
+    st._now, st.hasTimedOut, st.timeout_set_ms = 3000, True, None
+    out = list(update(key, iter(()), st))
     assert len(out) == 1 and out[0].iloc[0]["metric"] == 5.0
-    assert handle.listTimers() == [3000 + 2000]
+    assert st.timeout_set_ms == 2000
 
     # expired tombstone: emitted once, then state removed
-    vs.update(("expired", 5.0, 1.0, 0, 5000))
-    shim = TwsGroupStateShim(vs, handle, _FakeTimerValues(5000), has_timed_out=True)
-    out = list(update(key, iter(()), shim))
+    st.update(("expired", 5.0, 1.0, 0, 5000))
+    st._now = 5000
+    out = list(update(key, iter(()), st))
     assert len(out) == 1 and out[0].iloc[0]["state"] == "expired"
-    assert not vs.exists()
+    assert not st.exists
 
 
-# --------------------- shim vs legacy: the FULL STATE_TABLE inventory
+# ----------------------- one contract script per stateful operator
 
 class _FakeSdf:
     """Permissive stand-in for the streaming DataFrame: builders may
@@ -280,9 +143,9 @@ def _fire(now=0, wm=0):
 
 
 def _state_table_cases():
-    """One executable contract script per STATE_TABLE operator:
+    """One executable contract script per stateful operator:
     (builder, key, script). Scripts span 2+ invocations so state is
-    carried, and timer ops include a handleExpiredTimer leg."""
+    carried, and timer ops include a timed-out leg."""
     import riemann_spark.streaming.stateful_ops as so
     from pyspark.sql import functions as F
 
@@ -504,54 +367,33 @@ def _state_table_cases():
 
 
 def _run_script(update, key, script, state):
-    import pandas as pd
-
-    from riemann_spark.streaming.state_api import TwsGroupStateShim
-
     out = []
     for kind, df, now, wm in script:
-        if isinstance(state, _FakeLegacyState):
-            state._now, state._wm = now, wm
-            state.hasTimedOut = kind == "timeout"
-            st = state
-        else:
-            vs, handle = state
-            st = TwsGroupStateShim(
-                vs, handle, _FakeTimerValues(now, wm),
-                has_timed_out=(kind == "timeout"),
-            )
+        state._now, state._wm = now, wm
+        state.hasTimedOut = kind == "timeout"
         rows = iter([df.copy()]) if df is not None else iter(())
-        out.extend(list(update(key, rows, st)))
+        out.extend(list(update(key, rows, state)))
     return out
 
 
-@pytest.mark.parametrize("op", sorted(
-    n for n in STATE_TABLE if n.startswith("streaming_")
-))
-def test_tws_shim_contract_full_state_table(spark, monkeypatch, op):
-    """VERDICT r5 directive #5: the fake-handle harness drives the
-    REAL update fn of EVERY STATE_TABLE operator through both state
-    surfaces — identical emissions, identical final checkpointed
-    state — so the TWS migration is proven mechanical for the whole
-    inventory, without google.protobuf."""
-    import pandas as pd
+STATEFUL_OPS = sorted(
+    name for name, _ in inspect.getmembers(stateful_ops)
+    if name.startswith("streaming_")
+)
 
+
+@pytest.mark.parametrize("op", STATEFUL_OPS)
+def test_tws_shim_contract_full_state_table(spark, monkeypatch, op):
+    """Every streaming_* operator in stateful_ops has a contract
+    script, and the REAL update fn it registers emits on that script
+    with state carried across invocations on the GroupState surface."""
     cases = _state_table_cases()
-    assert op in cases, f"no shim contract script for {op}"
+    assert op in cases, f"no contract script for {op}"
     build, key, script = cases[op]
     update = _capture_update(monkeypatch, build)
 
-    legacy = _FakeLegacyState()
-    out_legacy = _run_script(update, key, script, legacy)
-
-    vs, handle = _FakeValueState(), _FakeHandle()
-    out_shim = _run_script(update, key, script, (vs, handle))
-
-    assert len(out_legacy) == len(out_shim)
-    assert out_legacy, f"{op}: contract script produced no emissions"
-    for a, b in zip(out_legacy, out_shim):
-        pd.testing.assert_frame_equal(a, b)
-    assert legacy._v == vs._v  # identical final state (or both cleared)
+    out = _run_script(update, key, script, _FakeLegacyState())
+    assert out, f"{op}: contract script produced no emissions"
 
 
 def test_streaming_cusum_skips_null_baseline(monkeypatch):
@@ -604,32 +446,23 @@ def test_streaming_index_keep_keys_string_and_unknown(spark):
         streaming_index(sdf, keep_keys=("metric", "bogus"))
 
 
-def test_tws_shim_contract_index_reaper(spark):
-    """The 14th STATE_TABLE row — index_stream's event-time TTL
-    reaper — through both surfaces: upsert arms setTimeoutTimestamp,
-    the watermark-driven fire emits the synthetic expired row and
-    clears state."""
-    import pandas as pd
-
+def test_tws_shim_contract_index_reaper():
+    """index_stream's event-time TTL reaper: the upsert arms
+    setTimeoutTimestamp at time+ttl, the watermark-driven fire emits
+    the synthetic expired row and clears state."""
     from riemann_spark.streaming.index_stream import _update
 
-    key = ("h1", "svc")
     script = [
         _data(_pdf(event_id=[0], time=[1.0], metric=[2.0],
                    state=["ok"], ttl=[2.0]), wm=0),
         _fire(wm=5000),
     ]
     legacy = _FakeLegacyState()
-    out_legacy = _run_script(_update, key, script, legacy)
-    vs, handle = _FakeValueState(), _FakeHandle()
-    out_shim = _run_script(_update, key, script, (vs, handle))
+    out = _run_script(_update, ("h1", "svc"), script, legacy)
 
-    assert len(out_legacy) == len(out_shim) == 2
-    for a, b in zip(out_legacy, out_shim):
-        pd.testing.assert_frame_equal(a, b)
-    assert out_shim[1].iloc[0]["state"] == "expired"
-    assert legacy._v is None and vs._v is None  # reaper cleared both
-    # the shim's event-time timer was armed at time+ttl (3000 ms)
+    assert len(out) == 2
+    assert out[1].iloc[0]["state"] == "expired"
+    assert legacy._v is None  # the reaper cleared the key
     assert legacy.timeout_set_ms == 3000
 
 
