@@ -74,7 +74,10 @@ class TcpMsgServer:
 
     ``frames`` collects every received event-bearing payload (bytes);
     queries are answered inline and not spooled, mirroring the
-    reference's handle-request split.
+    reference's ``handle`` (transport.clj:167-189): a Msg's events are
+    spooled whether or not it also carries a query, and a query to a
+    server with no ``query_handler`` gets ``{ok: false, error: "no
+    index"}``.
 
     ``tls_context`` (an ``ssl.SSLContext``) enables the reference's
     ``:tls?`` lane (transport/tcp.clj:222-226 ssl-handler, :260-270 —
@@ -106,13 +109,16 @@ class TcpMsgServer:
                     if payload is None:
                         return
                     msg = decode_msg(payload)
-                    if msg["query"] is not None and outer._query_handler:
-                        events = outer._query_handler(msg["query"])
-                        reply = encode_msg(events, ok=True)
-                    else:
+                    query = msg["query"]
+                    if query is None or msg["events"]:
                         with outer._lock:
                             outer.frames.append(payload)
+                    if query is None:
                         reply = encode_msg(ok=True)
+                    elif outer._query_handler is None:
+                        reply = encode_msg(ok=False, error="no index")
+                    else:
+                        reply = encode_msg(outer._query_handler(query), ok=True)
                     wf.write(struct.pack(">I", len(reply)) + reply)
                     wf.flush()
 

@@ -3,9 +3,11 @@ int32 framing (transport/tcp.clj:44-51), the shared wire decode."""
 
 from __future__ import annotations
 
+import socket
+import struct
 import threading
 
-from riemann_spark.query import compile_query
+from riemann_spark.sources.protobuf import decode_msg, encode_msg
 from riemann_spark.sources.servers import (
     TcpMsgServer,
     UdpMsgServer,
@@ -51,16 +53,20 @@ def test_tcp_roundtrip_concurrent_clients(spark):
         assert r["attributes"]["dc"] == e["attributes"]["dc"]
 
 
-def test_tcp_query_endpoint_uses_query_language(spark):
-    # index snapshot served over the socket, filtered by the real
-    # query-language compiler — the reference's query Msg path
-    idx = spark.createDataFrame(
+def test_tcp_query_endpoint_uses_query_language(spark, tmp_path):
+    # the stored index served over the socket through index.search —
+    # the reference's query Msg path, as the engine serves it
+    from riemann_spark.operators import index
+
+    path = str(tmp_path / "index")
+    spark.createDataFrame(
         [(e["host"], e["service"], e["state"], e["metric"], e["time"]) for e in EVENTS],
         "host string, service string, state string, metric double, time double",
-    )
+    ).write.parquet(path)
+    idx = spark.read.parquet(path)
 
     def handler(q):
-        return [r.asDict() for r in idx.filter(compile_query(q)).collect()]
+        return [r.asDict() for r in index.search(idx, q).collect()]
 
     with TcpMsgServer(query_handler=handler) as srv:
         reply = query_tcp(srv.port, 'state = "warn" and metric > 10')
@@ -70,6 +76,37 @@ def test_tcp_query_endpoint_uses_query_language(spark):
         e["host"] for e in EVENTS if e["state"] == "warn" and e["metric"] > 10
     )
     assert hosts == want and hosts
+
+
+def _send_msg(port: int, payload: bytes) -> dict:
+    """One raw framed Msg over TCP; the decoded reply."""
+    with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+        s.sendall(struct.pack(">I", len(payload)) + payload)
+        rf = s.makefile("rb")
+        (ln,) = struct.unpack(">I", rf.read(4))
+        return decode_msg(rf.read(ln))
+
+
+def test_tcp_msg_with_events_and_query_spools_the_events(spark):
+    """transport.clj handle: a Msg's events are streamed, and its query
+    answered, in the same request."""
+    answer = [{"host": "idx", "service": "s", "metric": 1.0}]
+    with TcpMsgServer(query_handler=lambda q: answer) as srv:
+        reply = _send_msg(srv.port, encode_msg(EVENTS[:3], query='host = "idx"'))
+        got = srv.received_events(spark).collect()
+    assert reply["ok"] is True
+    assert [e["host"] for e in reply["events"]] == ["idx"]
+    assert sorted(r["host"] for r in got) == ["h0", "h1", "h2"]
+
+
+def test_tcp_query_without_index_is_refused_not_spooled():
+    """transport.clj handle: a query to a core with no index answers
+    {ok false, error "no index"}; it is not an event frame."""
+    with TcpMsgServer() as srv:
+        reply = query_tcp(srv.port, 'host = "h1"')
+        assert srv.frames == []
+    assert reply["ok"] is False and reply["error"] == "no index"
+    assert reply["events"] == []
 
 
 def test_udp_fire_and_forget(spark):
