@@ -547,7 +547,7 @@ def consume_msg_events(
     called ``consume``; JSON payloads (content-type application/json)
     are accepted too, one event object per message, mirroring the
     forwarder's default formatter."""
-    from riemann_spark.sources.protobuf import decode_msg
+    from riemann_spark.sources.protobuf import decode_msg, msg_events
 
     events: list[dict] = []
     for _ in range(n_messages):
@@ -555,5 +555,5 @@ def consume_msg_events(
         if ctype == "application/json":
             events.append(json.loads(body))
         else:
-            events.extend(decode_msg(body).get("events", []))
+            events.extend(msg_events(decode_msg(body)))
     return events

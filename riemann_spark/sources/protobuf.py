@@ -44,14 +44,15 @@ the reference client codec:
 Spark integration is ``mapInPandas`` over Arrow batches — the codec is
 a per-row byte-string transform at the serialization boundary (the
 same place the reference runs its Netty codec), not a query operator;
-everything downstream of decode is Column-only.
+everything downstream of decode is Column-only. (The TCP/UDP servers
+decode on arrival instead; both build rows with ``event_columns``.)
 """
 
 from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -229,8 +230,11 @@ def decode_event(buf: bytes) -> dict:
                 i += 1
             else:
                 ln, i = read_uv(buf, i)
-            chunk = buf[i : i + ln]
-            i += ln
+            j = i + ln
+            if j > n:
+                raise ValueError("truncated length-delimited field")
+            chunk = buf[i:j]
+            i = j
             name = _STR_FIELDS.get(field)
             if name is not None:
                 e[name] = chunk.decode("utf-8")
@@ -239,9 +243,11 @@ def decode_event(buf: bytes) -> dict:
             elif field == 9:
                 k = v = None
                 j = 0
-                while j < len(chunk):
+                while j < ln:
                     ak, j = _read_uvarint(chunk, j)
                     aln, j = _read_uvarint(chunk, j)
+                    if j + aln > ln:
+                        raise ValueError("truncated attribute field")
                     s = chunk[j : j + aln].decode("utf-8")
                     j += aln
                     if ak >> 3 == 1:
@@ -281,6 +287,12 @@ def encode_msg(
     return bytes(out)
 
 
+def msg_events(m: dict) -> list[dict]:
+    """The events a decoded Msg carries: ``events``, then the legacy
+    ``states`` (transport.clj handle streams both)."""
+    return m["events"] + m["states"]
+
+
 def decode_msg(buf: bytes) -> dict:
     """Decode ``Msg`` wire bytes → {ok, error, query, events, states}."""
     m: dict = {"ok": None, "error": None, "query": None, "events": [], "states": []}
@@ -303,15 +315,20 @@ def decode_msg(buf: bytes) -> dict:
                 i += 1
             else:
                 ln, i = read_uv(buf, i)
-            chunk = buf[i : i + ln]
-            i += ln
+            j = i + ln
+            if j > n:
+                raise ValueError("truncated length-delimited field")
+            chunk = buf[i:j]
+            i = j
             if field == 3:
                 m["error"] = chunk.decode("utf-8")
             elif field == 5:
                 j = 0
-                while j < len(chunk):
+                while j < ln:
                     qk, j = _read_uvarint(chunk, j)
                     qln, j = _read_uvarint(chunk, j)
+                    if j + qln > ln:
+                        raise ValueError("truncated query field")
                     if qk >> 3 == 1:
                         m["query"] = chunk[j : j + qln].decode("utf-8")
                     j += qln
@@ -382,6 +399,27 @@ def events_to_msg_binary(df: DataFrame) -> DataFrame:
     return spread_for_python(df.select(*cols)).mapInPandas(enc, _ENC_SCHEMA)
 
 
+def event_columns(events: Iterable[dict]) -> dict[str, list]:
+    """The one event-to-row mapping: decoded event dicts to
+    DECODED_SCHEMA columns, one python list per column (pandas and
+    Arrow each assemble a list as a single array, no per-row boxing)."""
+    cols: list[list] = [[] for _ in DECODED_SCHEMA.names]
+    for e in events:
+        g = e.get
+        m, t = g("metric"), g("ttl")
+        cols[0].append(g("host"))
+        cols[1].append(g("service"))
+        cols[2].append(g("state"))
+        cols[3].append(g("description"))
+        cols[4].append(None if m is None else float(m))
+        cols[5].append(g("tags") or [])
+        cols[6].append(g("time"))
+        cols[7].append(g("time_us"))
+        cols[8].append(None if t is None else float(t))
+        cols[9].append(g("attributes") or {})
+    return dict(zip(DECODED_SCHEMA.names, cols))
+
+
 def _decoded_batches(
     batches: Iterator[pd.DataFrame], bin_col: str, skip_bad: bool
 ) -> Iterator[pd.DataFrame]:
@@ -390,35 +428,18 @@ def _decoded_batches(
     nothing: its empty columns would build as float64, which Arrow
     cannot convert to the list/map fields. ``skip_bad`` drops
     undecodable frames instead of raising."""
-    names = [f.name for f in DECODED_SCHEMA.fields]
     for pdf in batches:
-        # one python list per output column — pandas assembles each
-        # as a single object array, no per-row list boxing
-        cols: list[list] = [[] for _ in names]
+        events: list[dict] = []
         for buf in pdf[bin_col]:
             if type(buf) is not bytes:  # Arrow usually hands bytes already
                 buf = bytes(buf)
             try:
-                events = decode_msg(buf)["events"]
+                events += msg_events(decode_msg(buf))
             except Exception:
                 if not skip_bad:
                     raise
-                continue
-            for e in events:
-                g = e.get
-                m, t = g("metric"), g("ttl")
-                cols[0].append(g("host"))
-                cols[1].append(g("service"))
-                cols[2].append(g("state"))
-                cols[3].append(g("description"))
-                cols[4].append(None if m is None else float(m))
-                cols[5].append(g("tags") or [])
-                cols[6].append(g("time"))
-                cols[7].append(g("time_us"))
-                cols[8].append(None if t is None else float(t))
-                cols[9].append(g("attributes") or {})
-        if cols[0]:
-            yield pd.DataFrame(dict(zip(names, cols)))
+        if events:
+            yield pd.DataFrame(event_columns(events))
 
 
 def msg_binary_to_events(df: DataFrame, bin_col: str = "msg") -> DataFrame:

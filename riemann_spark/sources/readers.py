@@ -3,7 +3,7 @@
 | reference server | here |
 |---|---|
 | kafka-consumer (kafka.clj:92-119) | ``read_kafka_events`` — native Kafka source + JSON codec; broker-less correctness signal via ``sources.kafka_codec`` (RecordBatch-v2 byte codec, oracle-gated by ``kafka_codec_roundtrip``) |
-| tcp/udp protobuf servers (transport/tcp.clj:246-296) | ``sources.servers`` — in-process loopback servers (int32-framed TCP w/ ack+query, UDP datagrams); at deploy scale ``read_kafka_msg_frames`` bridges the same ``Msg`` frames through Kafka, decoded by ``sources.protobuf.msg_binary_to_events`` (pure-Python wire codec, no protobuf lib needed) |
+| tcp/udp protobuf servers (transport/tcp.clj:246-296) | ``sources.servers`` — in-process loopback servers (int32-framed TCP w/ ack+query, UDP datagrams) that decode each frame once, on arrival, and lift the spooled events into a local relation; at deploy scale ``read_kafka_msg_frames`` bridges the same ``Msg`` frames through Kafka, decoded inside Spark by ``sources.protobuf.msg_binary_to_events`` (pure-Python wire codec, no protobuf lib needed); both build rows with ``sources.protobuf.event_columns`` |
 | ws-server ingest (websockets.clj:94-133) | socket/file source + JSON codec |
 | graphite/opentsdb servers | ``read_socket_lines`` + the line parsers |
 

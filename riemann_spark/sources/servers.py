@@ -14,11 +14,11 @@ Wire format (the public riemann protocol):
 
 At deployment scale this edge tier is usually replaced by Kafka
 (``sources.readers.read_kafka_msg_frames``), but the servers here
-close the loop in-container: a real socket, the real framing, and the
-same Arrow-batched wire decode (``sources.protobuf``) the Kafka bridge
-uses. Received frames spool in memory (the container stand-in for a
-durable ingest buffer); ``received_events`` lifts them into an event
-DataFrame.
+close the loop in-container: a real socket, the real framing, and one
+decode per frame, on arrival. Decoded events spool in memory (the
+container stand-in for a durable ingest buffer); ``received_events``
+lifts them into an event DataFrame through the event-to-row mapping
+the Kafka bridge uses (``sources.protobuf.event_columns``).
 """
 
 from __future__ import annotations
@@ -33,9 +33,11 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 
 from riemann_spark.sources.protobuf import (
+    DECODED_SCHEMA,
     decode_msg,
     encode_msg,
-    msg_binary_to_events,
+    event_columns,
+    msg_events,
 )
 
 # handler for query Msgs: query string -> event dicts to return
@@ -52,32 +54,57 @@ def _read_exact(rf, n: int) -> bytes | None:
     return buf
 
 
-def _received_events(
-    server: "TcpMsgServer | UdpMsgServer",
-    spark: SparkSession,
-    now: float | None,
-) -> DataFrame:
-    """Decode a server's spooled frames into event rows (multi-event
-    frames fan out), through the same mapInPandas codec as the Kafka
-    bridge. Time-less events get the ingest clock — the decode-msg
-    -> post-load-event seam (common.clj:86-98); ``now`` pins it."""
-    from riemann_spark.operators.stateless import ensure_event_times
+class _MsgServer:
+    """A loopback server on an ephemeral ``port`` and its spool:
+    ``frames`` holds one entry per event-bearing Msg, the event dicts
+    its handler decoded on arrival (riemann decodes once, in its Netty
+    pipeline: transport.clj:107-132)."""
 
-    with server._lock:
-        rows = [(f,) for f in server.frames]
-    raw = spark.createDataFrame(rows, "msg binary")
-    return ensure_event_times(msg_binary_to_events(raw), now=now)
+    def __init__(self, server_cls: type, handler_cls: type) -> None:
+        self.frames: list[list[dict]] = []
+        self._lock = threading.Lock()
+        self._server = server_cls(("127.0.0.1", 0), handler_cls)
+        self.port: int = self._server.server_address[1]
+        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+
+    def _spool(self, events: list[dict]) -> None:
+        if events:
+            with self._lock:
+                self.frames.append(events)
+
+    def __enter__(self):
+        self._thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._server.shutdown()
+        self._server.server_close()
+
+    def received_events(self, spark: SparkSession, now: float | None = None) -> DataFrame:
+        """The spooled events as one DECODED_SCHEMA frame, lifted
+        through Arrow into a local relation: no decode and no Python
+        worker. Time-less events get the ingest clock — the decode-msg
+        -> post-load-event seam (common.clj:86-98); ``now`` pins it."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from riemann_spark.operators.stateless import ensure_event_times
+
+        with self._lock:
+            events = [e for f in self.frames for e in f]
+        table = pa.Table.from_pydict(event_columns(events), to_arrow_schema(DECODED_SCHEMA))
+        return ensure_event_times(spark.createDataFrame(table, DECODED_SCHEMA), now=now)
 
 
-class TcpMsgServer:
+class TcpMsgServer(_MsgServer):
     """Threaded loopback TCP server speaking int32-framed ``Msg``.
 
-    ``frames`` collects every received event-bearing payload (bytes);
-    queries are answered inline and not spooled, mirroring the
-    reference's ``handle`` (transport.clj:167-189): a Msg's events are
-    spooled whether or not it also carries a query, and a query to a
-    server with no ``query_handler`` gets ``{ok: false, error: "no
-    index"}``.
+    A Msg's events and legacy states are spooled whether or not it
+    also carries a query; queries are answered inline, mirroring the
+    reference's ``handle`` (transport.clj:167-189). A query to a server
+    with no ``query_handler`` gets ``{ok: false, error: "no index"}``,
+    and one the handler raises on gets ``{ok: false, error:
+    <message>}``; the connection stays open.
 
     ``tls_context`` (an ``ssl.SSLContext``) enables the reference's
     ``:tls?`` lane (transport/tcp.clj:222-226 ssl-handler, :260-270 —
@@ -91,8 +118,6 @@ class TcpMsgServer:
         query_handler: QueryHandler | None = None,
         tls_context: ssl.SSLContext | None = None,
     ):
-        self.frames: list[bytes] = []
-        self._lock = threading.Lock()
         self._query_handler = query_handler
         outer = self
 
@@ -109,16 +134,17 @@ class TcpMsgServer:
                     if payload is None:
                         return
                     msg = decode_msg(payload)
+                    outer._spool(msg_events(msg))
                     query = msg["query"]
-                    if query is None or msg["events"]:
-                        with outer._lock:
-                            outer.frames.append(payload)
                     if query is None:
                         reply = encode_msg(ok=True)
                     elif outer._query_handler is None:
                         reply = encode_msg(ok=False, error="no index")
                     else:
-                        reply = encode_msg(outer._query_handler(query), ok=True)
+                        try:
+                            reply = encode_msg(outer._query_handler(query), ok=True)
+                        except Exception as exc:  # noqa: BLE001 — handle's catch-all
+                            reply = encode_msg(ok=False, error=str(exc))
                     wf.write(struct.pack(">I", len(reply)) + reply)
                     wf.flush()
 
@@ -135,58 +161,29 @@ class TcpMsgServer:
                     sock = tls_context.wrap_socket(sock, server_side=True)
                 return sock, addr
 
-        self._server = Server(("127.0.0.1", 0), Handler)
-        self.port: int = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def __enter__(self) -> "TcpMsgServer":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def received_events(
-        self, spark: SparkSession, now: float | None = None
-    ) -> DataFrame:
-        return _received_events(self, spark, now)
+        super().__init__(Server, Handler)
 
 
-class UdpMsgServer:
-    """Loopback UDP server: one datagram = one ``Msg``, no reply."""
+class UdpMsgServer(_MsgServer):
+    """Loopback UDP server: one datagram = one ``Msg``, no reply. A
+    datagram that does not decode is dropped (fire-and-forget)."""
 
     def __init__(self) -> None:
-        self.frames: list[bytes] = []
-        self._lock = threading.Lock()
         outer = self
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self) -> None:
-                payload = self.request[0]
-                with outer._lock:
-                    outer.frames.append(bytes(payload))
+                try:
+                    msg = decode_msg(self.request[0])
+                except (ValueError, IndexError, struct.error):  # malformed bytes
+                    return
+                outer._spool(msg_events(msg))
 
         class Server(socketserver.ThreadingUDPServer):
             allow_reuse_address = True
             daemon_threads = True
 
-        self._server = Server(("127.0.0.1", 0), Handler)
-        self.port: int = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def __enter__(self) -> "UdpMsgServer":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def received_events(
-        self, spark: SparkSession, now: float | None = None
-    ) -> DataFrame:
-        return _received_events(self, spark, now)
+        super().__init__(Server, Handler)
 
 
 # ------------------------------------------------------------------ #

@@ -794,10 +794,10 @@ def test_spread_decides_from_the_frame(spark):
     assert "RoundRobinPartitioning" in plan_of_df(spread)
 
 
-def test_received_events_decode_has_no_exchange(spark):
-    """The wire frames' createDataFrame frame is already cluster-wide,
-    so the decode runs on it directly — no round-robin in front of
-    MapInPandas."""
+def test_received_events_plan_has_no_python_stage(spark):
+    """The servers decode each frame once, on arrival: ``received_events``
+    lifts the spooled events into a local relation, with no Python
+    stage and no exchange in front of it."""
     from riemann_spark.sources.servers import TcpMsgServer, send_events_tcp
 
     width = spark.sparkContext.defaultParallelism
@@ -807,7 +807,9 @@ def test_received_events_decode_has_no_exchange(spark):
         events = srv.received_events(spark)
         p = plan_of_df(events)
         assert events.count() == width + 1
-    assert "MapInPandas" in p
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in p, node
+    assert "LocalTableScan" in p
     assert exchange_nodes(p) == 0
 
 

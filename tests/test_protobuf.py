@@ -173,9 +173,10 @@ def test_decode_dead_letter_split(spark):
 
 
 def test_event_less_frame_decodes_to_no_rows(spark):
-    """A ``Msg{ok}`` frame carries no events (TcpMsgServer spools any
-    non-query Msg). Alone in a partition it decodes to 0 rows on both
-    decode paths, and beside an event frame it adds none."""
+    """A ``Msg{ok}`` frame carries no events (a Kafka topic may carry
+    one; the servers spool only event-bearing Msgs). Alone in a
+    partition it decodes to 0 rows on both decode paths, and beside an
+    event frame it adds none."""
     from riemann_spark.sources.protobuf import (
         encode_msg,
         msg_binary_to_events,
@@ -191,3 +192,49 @@ def test_event_less_frame_decodes_to_no_rows(spark):
         [(encode_msg(ok=True),), (good,)], 2
     ).toDF("msg binary")
     assert [r.host for r in msg_binary_to_events(mixed).collect()] == ["h1"]
+
+
+def _states_msg(events: list[dict]) -> bytes:
+    """A Msg carrying its events in the legacy ``states`` field (4)."""
+    from riemann_spark.sources.protobuf import _msg_field
+
+    return b"".join(_msg_field(4, encode_event(e)) for e in events)
+
+
+def test_states_decode_as_events_through_the_bridge(spark):
+    """transport.clj handle streams ``states`` as well as ``events``: a
+    states-only Msg decodes to one row per state."""
+    from riemann_spark.sources.protobuf import msg_binary_to_events
+
+    frame = _states_msg([{"host": "s1", "service": "svc", "metric": 2.0, "time": 5.0}])
+    assert decode_msg(frame)["states"][0]["host"] == "s1"
+    df = spark.createDataFrame([(frame,)], "msg binary")
+    got = [(r.host, r.metric, r.time) for r in msg_binary_to_events(df).collect()]
+    assert got == [("s1", 2.0, 5.0)]
+
+
+@pytest.mark.parametrize(
+    "buf",
+    [
+        b"\x32\x05\x22\x01h",  # Msg announces a 5-byte event, carries 3
+        b"\x32\x04\x22\x05ho",  # event host announces 5 bytes, carries 2
+        b"\x2a\x04\x0a\x07ab",  # query string announces 7 bytes, carries 2
+        b"\x32\x05\x4a\x03\x0a\x05k",  # attribute key overruns its attribute
+    ],
+    ids=["event", "event_field", "query", "attribute"],
+)
+def test_truncated_length_delimited_field_raises(buf):
+    with pytest.raises(ValueError, match="truncated"):
+        decode_msg(buf)
+
+
+def test_truncated_frame_goes_to_the_dead_letter_side(spark):
+    from riemann_spark.sources.protobuf import msg_binary_to_events_with_errors
+
+    good = encode_msg([{"host": "h1", "service": "s", "time": 10.0}])
+    bad = b"\x32\x05\x22\x01h"
+    df = spark.createDataFrame([(good,), (bad,)], "msg binary")
+    ok, dead = msg_binary_to_events_with_errors(df)
+    assert [r.host for r in ok.collect()] == ["h1"]
+    (dl,) = dead.collect()
+    assert bytes(dl.msg) == bad and "truncated" in dl.error

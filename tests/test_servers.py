@@ -1,5 +1,6 @@
 """Loopback TCP/UDP Msg-server round-trips: real sockets, the real
-int32 framing (transport/tcp.clj:44-51), the shared wire decode."""
+int32 framing (transport/tcp.clj:44-51), each frame decoded once on
+arrival and its events lifted by ``received_events``."""
 
 from __future__ import annotations
 
@@ -7,7 +8,13 @@ import socket
 import struct
 import threading
 
-from riemann_spark.sources.protobuf import decode_msg, encode_msg
+from riemann_spark.sources.protobuf import (
+    DECODED_SCHEMA,
+    _msg_field,
+    decode_msg,
+    encode_event,
+    encode_msg,
+)
 from riemann_spark.sources.servers import (
     TcpMsgServer,
     UdpMsgServer,
@@ -122,6 +129,71 @@ def test_udp_fire_and_forget(spark):
         got = srv.received_events(spark).collect()
     assert sorted(r["host"] for r in got) == sorted(e["host"] for e in EVENTS[:6])
     assert {r["service"] for r in got} == {"api latency"}
+
+
+def test_udp_malformed_datagram_is_dropped(spark):
+    """A datagram that does not decode is dropped on arrival; the good
+    datagrams around it still lift (UDP is fire-and-forget)."""
+    import time
+
+    with UdpMsgServer() as srv:
+        send_events_udp(srv.port, EVENTS[:1])
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:
+            s.sendto(b"\x32\x05\x22\x01h", ("127.0.0.1", srv.port))
+        send_events_udp(srv.port, EVENTS[1:2])
+        deadline = time.time() + 5
+        while len(srv.frames) < 2 and time.time() < deadline:
+            time.sleep(0.05)
+        time.sleep(0.1)  # the bad datagram had time to land too
+        got = sorted(r["host"] for r in srv.received_events(spark).collect())
+    assert got == ["h0", "h1"]
+
+
+def test_tcp_states_only_msg_is_spooled(spark):
+    """transport.clj handle streams a Msg's ``states`` as well as its
+    ``events``."""
+    payload = b"".join(_msg_field(4, encode_event(e)) for e in EVENTS[:2])
+    with TcpMsgServer() as srv:
+        reply = _send_msg(srv.port, payload)
+        got = sorted(r["host"] for r in srv.received_events(spark).collect())
+    assert reply["ok"] is True
+    assert got == ["h0", "h1"]
+
+
+def test_tcp_failing_query_answers_error_and_keeps_connection():
+    """transport.clj handle catches a failing query and answers
+    {ok false, error <message>}; the connection stays usable."""
+    from riemann_spark.query.parser import parse
+
+    def handler(q):
+        parse(q)
+        return []
+
+    with TcpMsgServer(query_handler=handler) as srv:
+        with socket.create_connection(("127.0.0.1", srv.port), timeout=10) as s:
+            rf = s.makefile("rb")
+
+            def ask(payload: bytes) -> dict:
+                s.sendall(struct.pack(">I", len(payload)) + payload)
+                (ln,) = struct.unpack(">I", rf.read(4))
+                return decode_msg(rf.read(ln))
+
+            bad = ask(encode_msg(query="host = "))
+            again = ask(encode_msg(EVENTS[:1]))
+        assert len(srv.frames) == 1
+    assert bad["ok"] is False and bad["error"]
+    assert again["ok"] is True
+
+
+def test_received_events_on_empty_spool(spark):
+    """No frames: 0 rows, still the decoded schema with the time
+    columns the ingest clock fills."""
+    with TcpMsgServer() as srv:
+        df = srv.received_events(spark)
+        assert df.schema.names == DECODED_SCHEMA.names
+        assert dict(df.dtypes)["time"] == "double"
+        assert dict(df.dtypes)["time_us"] == "bigint"
+        assert df.collect() == []
 
 
 def test_riemann_forward_sink_roundtrip(spark):
